@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** ANN-ladder scale smoke (round 7, VERDICT r6 item 5): build, probe,
@@ -35,45 +31,14 @@ object AnnScaleSmoke {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/repo/benchdata/emb_x25",
         "/root/repo/benchdata/emb_x100", "/root/repo/benchdata/emb_x250")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", 8 * 1024 * 1024)
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-ann-smoke-wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val shufWrite = new AtomicLong(0L)
-    val shufRead = new AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val m = e.stageInfo.taskMetrics
-        if (m != null) {
-          shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        }
-      }
-    })
-
+    val spark = GraftSession.start(GraftSession.bench(GraftSession.cpus(32)))
+    val meter = Meter(spark)
+    // wall time and shuffle write+read bytes of one build/append
     def timed(f: => Unit): (Double, Long) = {
-      val w0 = shufWrite.get() + shufRead.get()
-      val t0 = System.nanoTime()
-      f
-      ((System.nanoTime() - t0) / 1e9, shufWrite.get() + shufRead.get() - w0)
+      val (_, r) = meter(f)
+      (r.sec, r.shuffleWrite + r.shuffleRead)
     }
-    def medQuery(f: => Unit): Double = {
-      f // warm-up
-      Seq.fill(3) { val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9 }
-        .sorted.apply(1)
-    }
-    def force(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
+    import Meter.{force, median}
 
     import graft.operators.{IvfIndex, IvfPq, ScalarQuantizer}
     val Cells = 256
@@ -93,7 +58,7 @@ object AnnScaleSmoke {
       // (the x10 ivf256 bench line's pin; a real corpus keeps bucketing)
       val (ivfBuild, ivfBuildSh) = timed(IvfIndex.build(
         corpus, "vec_id", "embedding", "ann_smoke_ivf", Cells, buckets = 1))
-      val ivfQ = medQuery(force(IvfIndex.topKIndexed(spark, "ann_smoke_ivf",
+      val ivfQ = median(force(IvfIndex.topKIndexed(spark, "ann_smoke_ivf",
         "vec_id", "embedding", probe, k = 10, nprobe = Nprobe)))
       val (ivfApp, _) = timed(IvfIndex.append(spark, "ann_smoke_ivf",
         batch, "vec_id", "embedding", buckets = 1))
@@ -101,7 +66,7 @@ object AnnScaleSmoke {
       val (ipqBuild, ipqBuildSh) = timed(IvfPq.build(
         corpus, "vec_id", "embedding", "ann_smoke_ivfpq",
         numCells = Cells, m = 8, codesK = 64, iters = 1, buckets = 1))
-      val ipqQ = medQuery(force(IvfPq.topKIndexed(spark, "ann_smoke_ivfpq",
+      val ipqQ = median(force(IvfPq.topKIndexed(spark, "ann_smoke_ivfpq",
         corpus, "vec_id", "embedding", probe,
         k = 10, nprobe = Nprobe, shortlist = 100)))
       val (ipqApp, _) = timed(IvfPq.append(spark, "ann_smoke_ivfpq",
@@ -109,7 +74,7 @@ object AnnScaleSmoke {
 
       val (sqBuild, sqBuildSh) = timed(ScalarQuantizer.buildSqIndex(
         corpus, "vec_id", "embedding", "ann_smoke_sq"))
-      val sqQ = medQuery(force(ScalarQuantizer.sqRerankTopKIndexed(spark,
+      val sqQ = median(force(ScalarQuantizer.sqRerankTopKIndexed(spark,
         "ann_smoke_sq", corpus, "vec_id", "embedding", probe,
         shortlist = 100, k = 10)))
       val (sqApp, _) = timed(ScalarQuantizer.appendToSqIndex(spark,

@@ -31,18 +31,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  def force(df: org.apache.spark.sql.DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
-
-  private val gcBeans =
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-
-  private def gcMillis: Long = {
-    var sum = 0L
-    val it = gcBeans.iterator()
-    while (it.hasNext) { val t = it.next().getCollectionTime; if (t > 0) sum += t }
-    sum
-  }
+  import Meter.force
 
   /** One measured query: median of the timed runs plus the evidence. */
   final case class Measure(
@@ -51,42 +40,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      // Bench-scale split sizing: the sf0.1 tables are single ~10-30 MB
-      // parquet files — at the 128 MB default each scan is ONE task and
-      // CPU-bound queries run single-threaded. 4 MB splits engage the
-      // cores; a real cluster at 100 TB keeps the default (row groups
-      // there are plentiful).
-      .config("spark.sql.files.maxPartitionBytes", 4 * 1024 * 1024)
-      .config("spark.sql.files.openCostInBytes", 1024 * 1024)
-      // CPU-heavy text tables (documents ≈ 6 MB at the 10× point) would
-      // otherwise get 1-2 splits — force at least one split per core so
-      // row-local scans engage the full machine
-      .config("spark.sql.files.minPartitionNum", cpus)
-      .config("spark.ui.enabled", "false")
-      // index-build bench lines write catalog tables — keep them off cwd
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-bench-wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start(GraftSession.bench(GraftSession.cpus(32)))
 
     val suiteT0 = System.nanoTime()
-
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime()
-      f
-      (System.nanoTime() - t0) / 1e9
-    }
 
     // Every measured line keeps its thunk so the post-suite healing pass
     // (r6 VERDICT item 1) can re-execute it. All registered work is
@@ -99,11 +56,8 @@ object Bench {
       val at = (System.nanoTime() - suiteT0) / 1e9
       thunks(name) = () => f
       try {
-        f // warm-up (plan + IO cache)
-        val gc0 = gcMillis
-        val samples = Seq.fill(runs)(time(f))
-        val gcSec = (gcMillis - gc0) / 1e3
-        Measure(name, samples.sorted.apply(samples.size / 2), samples, gcSec, at)
+        val t = Meter.timing(runs)(f)
+        Measure(name, t.median, t.samples, t.gcSec, at)
       } catch {
         case _: Throwable => Measure(name, -1.0, Seq(), 0.0, at)
       }
@@ -111,11 +65,7 @@ object Bench {
 
     // per-job floor: schedule+commit cost of a 1-row job through the same
     // noop sink — subtract from any query time to get its marginal cost
-    def measureFloor(): Double = {
-      force(spark.range(1).toDF("x"))
-      val fs = Seq.fill(3)(time(force(spark.range(1).toDF("x")))).sorted
-      fs(1)
-    }
+    def measureFloor(): Double = Meter.median(force(spark.range(1).toDF("x")))
     val floor = measureFloor()
 
     // SPARK_GRAFT_BENCH_ONLY=q49_curation_patch,q38_minhash_lsh → time just
@@ -578,85 +528,11 @@ object Bench {
           }
           .sortBy(-_._1).headOption.map(_._2)
       }
-      path match {
-        case None => (Map.empty[String, Double], None)
-        case Some(p) =>
-          import org.json4s._
-          import org.json4s.jackson.JsonMethods
-          val txt = new String(
-            java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)),
-            java.nio.charset.StandardCharsets.UTF_8)
-          val root = JsonMethods.parse(txt)
-          val parsed =
-            if ((root \ "parsed") != JNothing) root \ "parsed" else root
-          val qs = (parsed \ "queries") match {
-            case o: JObject => o
-            case _ => JObject()
-          }
-          // a prior artifact written at the base-36 degradation level
-          // declares "kf":"b36" — decode its keys back to decimal
-          val kf = (parsed \ "kf") match {
-            case JString(s) => Some(s)
-            case _ => None
-          }
-          def key(k: String) = HealPolicy.canonKey(HealPolicy.decodeKey(k, kf))
-          val vf = (parsed \ "vf") match {
-            case JString(s) => Some(s)
-            case _ => None
-          }
-          def med(v: Double) = HealPolicy.decodeMedian(v, vf)
-          def num(j: JValue): Option[Double] = j match {
-            case JDouble(v) => Some(v)
-            case JInt(v) => Some(v.toDouble)
-            case JDecimal(v) => Some(v.toDouble)
-            case _ => None
-          }
-          // r14 "arr" rung: medians ride a positional array ordered by
-          // the "qn" range spec; the non-numeric keys ride "qx"
-          val meds: Map[String, Double] =
-            if (kf.contains("arr")) {
-              val qn = (parsed \ "qn") match {
-                case JString(s) => s
-                case _ => ""
-              }
-              // positional decode is alignment-critical (r12, ADVICE):
-              // a single non-numeric entry or a qn/array length
-              // mismatch would silently shift every later median onto
-              // the wrong query key — treat either as a parse failure
-              // and degrade to NO numeric priors instead.
-              val valsOpt: Option[List[Double]] = (parsed \ "queries") match {
-                case JArray(vs) =>
-                  val each = vs.map(num)
-                  if (each.forall(_.isDefined)) Some(each.flatten) else None
-                case _ => None
-              }
-              val names = HealPolicy.decodeRanges(qn)
-              val numeric = valsOpt match {
-                case Some(vals) if names.length == vals.length =>
-                  names.zip(vals).map {
-                    case (n, v) => HealPolicy.canonKey(n.toString) -> med(v)
-                  }
-                case _ => List.empty[(String, Double)]
-              }
-              val extras = (parsed \ "qx") match {
-                case o: JObject => o.obj.flatMap { case (k, j) =>
-                  num(j).map(v => HealPolicy.canonKey(k) -> med(v))
-                }
-                case _ => List.empty[(String, Double)]
-              }
-              (numeric ++ extras).toMap
-            } else qs.obj.collect {
-              case (k, JDouble(v)) => key(k) -> med(v)
-              case (k, JInt(v)) => key(k) -> med(v.toDouble)
-              case (k, JDecimal(v)) => key(k) -> med(v.toDouble)
-            }.toMap
-          val pf = (parsed \ "floor") match {
-            case JDouble(v) => Some(v)
-            case JInt(v) => Some(v.toDouble)
-            case JDecimal(v) => Some(v.toDouble)
-            case _ => None
-          }
-          (meds, pf)
+      path.fold((Map.empty[String, Double], Option.empty[Double])) { p =>
+        val json = new String(
+          java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)),
+          java.nio.charset.StandardCharsets.UTF_8)
+        (HealPolicy.priorMedians(json), HealPolicy.priorFloor(json))
       }
     } catch { case _: Throwable => (Map.empty[String, Double], None) }
     // hot-box self-identification (r9, VERDICT #5): the pre-suite
@@ -688,7 +564,7 @@ object Bench {
       val thunk = thunks.getOrElse(m.name, { logRegr(-1, m.median); return (m, None) })
       var probeVal = -1.0
       val remeasure = HealPolicy.bimodal(m.median, m.samples) || {
-        val p = try time(thunk()) catch {
+        val p = try Meter.time(thunk()) catch {
           case _: Throwable => logRegr(-1, m.median); return (m, None)
         }
         probeVal = p
@@ -770,54 +646,17 @@ object Bench {
     val mediumLine = s"""{"metric":"total","value":$total,"unit":"sec","floor":$floor,"floor_post":$floorPost,"floor_r":$floorRJson,"rerun":$reruns,"regr":$regrMap,"queries":$qs3,"sf":"$sfDir"}"""
     println(mediumLine)
     println(mediumLine)
-    // 2 decimals: at 147 base queries the 3-decimal line crossed the
-    // 1900-char tail budget (the require below fired in round 6 —
-    // exactly its job). 10 ms resolution is fine for the compact gate
-    // line; full-precision medians stay on the telemetry lines above.
-    // r7: the leading 'q' drops from qNN keys too (151 queries +
-    // x132/x133 + "suspect" reached 1870/1900) — keys are the bare
-    // number ("05", "152"); the x-prefixed extras keep their prefix.
-    // Degradation ladder (r8, VERDICT item 6 — decided BEFORE the
-    // guard fires): 1) decimal keys + suspect list; 2) drop the
-    // suspect list; 3) base-36 keys ("134"->"3q", marked "kf":"b36" so
-    // the cross-round prior-median loader can decode — ~1 char per
-    // 3-digit key, ~2 per future 4-digit key). The require bar stays.
-    def renderQs(keyOf: String => String, vf: Option[String]): String = healedBase
-      .map { m =>
-        val v = vf match {
-          // centisecond ints ("vf":"cs") — 2 chars shorter than "0.12"
-          // per entry; the prior-median loader scales back by 0.01
-          case Some("cs") => math.round(m.median * 100).toString
-          case _ => f"${m.median}%.2f"
-        }
-        "\"" + keyOf(HealPolicy.shortName(m.name)) + "\":" + v
-      }
-      .mkString("{", ",", "}")
-    def renderFinal(susp: String, regr: String, kfMode: Option[String],
-                    vfMode: Option[String] = None,
-                    dropPost: Boolean = false): String = {
-      val kf = kfMode.map(m => s""""kf":"$m",""").getOrElse("")
-      val vf = vfMode.map(m => s""""vf":"$m",""").getOrElse("")
-      val keyOf: String => String = kfMode match {
-        case Some("b36") => HealPolicy.b36Key
-        case Some("b36x") => k => HealPolicy.b36Key(HealPolicy.xShortKey(k))
-        case Some("b36xt") => k =>
-          HealPolicy.b36Key(HealPolicy.trainShortKey(HealPolicy.xShortKey(k)))
-        case _ => identity
-      }
-      val qs2 = renderQs(keyOf, vfMode)
-      val post = if (dropPost) "" else f""""floor_post":$floorPost%.3f,"""
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","floor":$floor%.3f,$post%s"floor_r":$floorRJson%s,$kf%s$vf%s"suspect":$susp%s,"regr":$regr%s,"regr_n":$regrN%d,"queries":$qs2%s,"sf":"$sfDir"}"""
-    }
-    // r14 "arr" rung (VERDICT r10 #1 — the standing format from here):
-    // numeric base keys leave the line entirely — the key SET encodes
-    // once as a range spec ("qn":"1-81,83-203") and the cs-int medians
-    // ride a positional array in ascending-key order; the two
-    // non-numeric train keys ride the tiny "qx" object at their
-    // b36xt short forms. Measured at the 204-entry r10 surface:
-    // 1889 -> ~1010 chars, ~890 of headroom (~4+ chars/entry means
-    // ~100 more queries before the next rung is needed).
-    def renderFinalArr(susp: String, regr: String): Option[String] = {
+    // The compact line (VERDICT r10 #1): the 1900-char require below
+    // guards the driver's ~2000-char tail. Numeric base keys leave the
+    // line entirely — the key SET encodes once as a range spec
+    // ("qn":"1-81,83-203") and the centisecond medians ("vf":"cs") ride
+    // a positional array in ascending-key order; the two non-numeric
+    // train keys ride the tiny "qx" object at their short forms.
+    // Measured at the 204-entry r10 surface: ~1010 chars. If the line
+    // with the suspect/regr lists overflows, the lists drop (the
+    // telemetry line keeps the full regr evidence map); if it still
+    // overflows, the require fires — never raise the limit.
+    def renderFinal(susp: String, regr: String): Option[String] = {
       val keyed = healedBase.map { m =>
         (HealPolicy.shortName(m.name), math.round(m.median * 100))
       }
@@ -825,25 +664,9 @@ object Bench {
         f"""{"metric":"total","value":$total%.3f,"unit":"sec","floor":$floor%.3f,"floor_post":$floorPost%.3f,"floor_r":$floorRJson%s,"kf":"arr","vf":"cs","suspect":$susp%s,"regr":$regr%s,"regr_n":$regrN%d,"qn":"$qn%s","queries":$qv%s,"qx":$qx%s,"sf":"$sfDir"}"""
       }
     }
-    // degradation ladder, re-prioritized r11 (VERDICT r10 #1): the
-    // suspect/regr lists are the artifact's regression evidence, so
-    // EVERY with-lists rung is tried before ANY listless one —
-    // readable decimal keys when the surface is small, then the arr
-    // rung (which dominates all the key-compression rungs it
-    // replaces), with the legacy b36x/b36xt rungs kept only as
-    // fallbacks for a hypothetical non-numeric-keyed surface where
-    // the arr rung declines. The telemetry line always keeps the full
-    // regr evidence map regardless.
-    val finalLine = (Seq(
-      Some(renderFinal(suspectJson, regrJson, None)),
-      renderFinalArr(suspectJson, regrJson),
-      Some(renderFinal(suspectJson, regrJson, Some("b36x"), Some("cs"))),
-      Some(renderFinal("[]", "[]", Some("b36xt"), Some("cs"),
-        dropPost = true)),
-      renderFinalArr("[]", "[]")).flatten)
-      .find(_.length < 1900)
-      .getOrElse(renderFinal("[]", "[]", Some("b36xt"), Some("cs"),
-        dropPost = true))
+    val finalLine = renderFinal(suspectJson, regrJson).filter(_.length < 1900)
+      .orElse(renderFinal("[]", "[]"))
+      .getOrElse(sys.error("compact bench line: duplicate numeric query keys"))
     require(finalLine.length < 1900,
       s"final bench line ${finalLine.length} chars >= 1900 — would be tail-truncated")
     println(finalLine)

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale smoke for the V2 landing-zone connector (ProductTreeSource):
@@ -24,12 +23,7 @@ object ConnectorScaleSmoke {
   def main(args: Array[String]): Unit = {
     val nCats = args.headOption.map(_.toInt).getOrElse(100)
     val perCat = args.lift(1).map(_.toInt).getOrElse(100)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start(GraftSession.bench(GraftSession.cpus(32)))
 
     val root = Paths.get(System.getProperty("java.io.tmpdir"),
       s"graft_connector_smoke_${nCats}x$perCat")
@@ -51,23 +45,18 @@ object ConnectorScaleSmoke {
     def tree = spark.read.format("product-tree")
       .option("path", root.toString).load()
 
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    def med(f: => Unit): Double = { f; Seq.fill(3)(time(f)).sorted.apply(1) }
-
     // 1. derived-only: global count — never opens a file (same aggregate
     // shape as 3, so the delta to 3 is pure parse cost)
-    val tDerived = med {
+    val tDerived = Meter.median {
       tree.agg(count(lit(1))).collect()
     }
     // 2. pruned: one category of nCats — lists/parses 1/nCats of the tree
-    val tPruned = med {
+    val tPruned = Meter.median {
       tree.filter(col("category") === "cat0")
         .agg(sum("price_current"), count(lit(1))).collect()
     }
     // 3. full parse: every document opened and converted
-    val tFull = med {
+    val tFull = Meter.median {
       tree.agg(sum("price_current"), count(lit(1))).collect()
     }
     val nDocs = tree.count()

@@ -1,9 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** End-to-end corpus-pipeline capstone (round 8, r7 VERDICT item 4):
@@ -37,28 +34,8 @@ object CorpusPipelineSmoke {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", 8 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val shufWrite = new AtomicLong(0L)
-    val shufRead = new AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val m = e.stageInfo.taskMetrics
-        if (m != null) {
-          shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        }
-      }
-    })
+    val spark = GraftSession.start(GraftSession.bench(GraftSession.cpus(32)))
+    val meter = Meter(spark)
 
     val tmp = java.nio.file.Files.createTempDirectory("graft-pipeline").toString
     val lines = Seq.newBuilder[String]
@@ -68,19 +45,14 @@ object CorpusPipelineSmoke {
       * next stage's input. The row count reads parquet metadata after
       * the byte window closes. */
     def stage(name: String, json: Boolean = false)(out: DataFrame): DataFrame = {
-      Thread.sleep(500)
-      val w0 = shufWrite.get(); val r0 = shufRead.get()
-      val t0 = System.nanoTime()
       val path = s"$tmp/$name"
-      if (json) out.write.mode("overwrite").json(path)
-      else out.write.mode("overwrite").parquet(path)
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500)
-      val w = shufWrite.get() - w0
-      val r = shufRead.get() - r0
+      val (_, r) = meter {
+        if (json) out.write.mode("overwrite").json(path)
+        else out.write.mode("overwrite").parquet(path)
+      }
       val back = if (json) spark.read.json(path) else spark.read.parquet(path)
       val rows = back.count()
-      lines += f""""$name":{"sec":$sec%.2f,"shuffle_write_mb":${w / 1e6}%.1f,"shuffle_read_mb":${r / 1e6}%.1f,"rows":$rows}"""
+      lines += s""""$name":{${r.json},"rows":$rows}"""
       back
     }
 

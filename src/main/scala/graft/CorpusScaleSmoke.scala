@@ -1,10 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
-
 /** Corpus-pipeline scale smoke (round 6): wall time AND shuffle volume
   * for the text-corpus shapes as the document set grows 100× — the
   * claims to check are candidate-volume claims: q134's prefix-filtered
@@ -26,56 +21,10 @@ object CorpusScaleSmoke {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", 8 * 1024 * 1024)
-      // fresh managed-table location per run: the in-memory catalog
-      // forgets tables at exit but their files survive, and a re-run's
-      // saveAsTable would die on LOCATION_ALREADY_EXISTS (the Bench
-      // convention; needed since the q208state persistState line)
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-smoke-wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val shufWrite = new AtomicLong(0L)
-    val shufRead = new AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val m = e.stageInfo.taskMetrics
-        if (m != null) {
-          shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        }
-      }
-    })
+    val spark = GraftSession.start(GraftSession.bench(GraftSession.cpus(32)))
+    val meter = Meter(spark)
 
     val n = spark.read.parquet(s"$dir/documents.parquet").count()
-
-    // Forced through the noop sink, NOT count() (r8 fix): a count over
-    // a query ending in a cardinality-preserving left join (spanReport,
-    // removeSpans — right side aggregated on the join key) lets
-    // Catalyst eliminate the whole operator subtree, and the smoke
-    // "measures" a documents scan (observed: q123/q127 flat at 0.3-0.5s
-    // with 0 shuffle across 100x data). The rows count runs after the
-    // byte window closes so it pollutes nothing.
-    def runq(name: String): (Double, Long, Long, Long) = {
-      Thread.sleep(1000)
-      val w0 = shufWrite.get(); val r0 = shufRead.get()
-      val t0 = System.nanoTime()
-      Bench.force(SparkEntry.queries(name)(spark, dir))
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(1000)
-      val w = shufWrite.get() - w0
-      val r = shufRead.get() - r0
-      val rows = SparkEntry.queries(name)(spark, dir).count()
-      (sec, w, r, rows)
-    }
 
     // optional 2nd arg: comma-separated line names — run just those
     // (single-operator scale points without paying the whole sweep)
@@ -83,7 +32,7 @@ object CorpusScaleSmoke {
       args.drop(1).headOption.map(_.split(",").map(_.trim).toSet)
     def wanted(name: String): Boolean = onlyNames.forall(_.contains(name))
 
-    val lines = Seq("q134_setsim_join", "q136_token_budget_fill",
+    val queryNames = Seq("q134_setsim_join", "q136_token_budget_fill",
       "q138_pmi_collocations",
       // r8 (r7 VERDICT item 3): the span/contamination family — exact
       // substring-span dedup (q123 detect / q127 remove: hashed-shingle
@@ -167,10 +116,7 @@ object CorpusScaleSmoke {
       // claims above), the verdict assembly joins are batch-sized, and
       // the re-plan rollup is one (source, w) row per source
       "q208_ingest_capstone")
-      .filter(wanted).map { name =>
-      val (sec, w, r, rows) = runq(name)
-      f""""${name.takeWhile(_ != '_')}":{"sec":$sec%.2f,"shuffle_write_mb":${w / 1e6}%.1f,"shuffle_read_mb":${r / 1e6}%.1f,"rows":$rows}"""
-    }
+    val lines = meter.queries(dir, queryNames.filter(wanted))
 
     // q185's state-simulation term measured ALONE: the in-plan
     // lshBandWarehouse over the 6/7 warehouse split — the part a
@@ -181,18 +127,11 @@ object CorpusScaleSmoke {
     // smoke into simulation vs steady-state probe.
     val q185StateLine = if (!wanted("q185state")) None else Some {
       import org.apache.spark.sql.functions.col
-      Thread.sleep(1000)
-      val w0 = shufWrite.get(); val r0 = shufRead.get()
-      val t0 = System.nanoTime()
-      Bench.force(graft.operators.Dedup.lshBandWarehouse(
+      val (_, r) = meter(Meter.force(graft.operators.Dedup.lshBandWarehouse(
         spark.read.parquet(s"$dir/documents.parquet")
           .filter(col("doc_id") % 7 =!= 0),
-        "doc_id", "text", numPerms = 32, numBands = 8, shingleN = 3))
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(1000)
-      val w = shufWrite.get() - w0
-      val r = shufRead.get() - r0
-      f""""q185state":{"sec":$sec%.2f,"shuffle_write_mb":${w / 1e6}%.1f,"shuffle_read_mb":${r / 1e6}%.1f}"""
+        "doc_id", "text", numPerms = 32, numBands = 8, shingleN = 3)))
+      s""""q185state":{${r.json}}"""
     }
 
     // The q208 capstone's deployment decomposition (r13, VERDICT #1):
@@ -208,30 +147,18 @@ object CorpusScaleSmoke {
       import org.apache.spark.sql.functions.col
       val docs = graft.Tables.documents(spark, dir)
       val isBatch = col("doc_id") % 7 === 0
-      val tb = System.nanoTime()
-      graft.etl.IngestCapstone.persistState(
+      val buildSec = Meter.time(graft.etl.IngestCapstone.persistState(
         graft.etl.IngestCapstone.ingestState(
           docs.filter(!isBatch),
           docs.filter(!isBatch && col("doc_id") % 10 === 0),
           "doc_id", "lang", "source", "text", "n_chars"),
-        "smoke_ingest_state")
-      val buildSec = (System.nanoTime() - tb) / 1e9
-      Thread.sleep(1000)
-      val w0 = shufWrite.get(); val r0 = shufRead.get()
-      val t0 = System.nanoTime()
-      Bench.force(graft.etl.IngestCapstone.ingestDecisionsFromState(
+        "smoke_ingest_state"))
+      def probe = graft.etl.IngestCapstone.ingestDecisionsFromState(
         graft.etl.IngestCapstone.readState(spark, "smoke_ingest_state"),
         docs.filter(isBatch),
-        "doc_id", "lang", "source", "text", "n_chars"))
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(1000)
-      val w = shufWrite.get() - w0
-      val r = shufRead.get() - r0
-      val rows = graft.etl.IngestCapstone.ingestDecisionsFromState(
-        graft.etl.IngestCapstone.readState(spark, "smoke_ingest_state"),
-        docs.filter(isBatch),
-        "doc_id", "lang", "source", "text", "n_chars").count()
-      f""""q208state":{"build_sec":$buildSec%.2f,"probe_sec":$sec%.2f,"shuffle_write_mb":${w / 1e6}%.1f,"shuffle_read_mb":${r / 1e6}%.1f,"rows":$rows}"""
+        "doc_id", "lang", "source", "text", "n_chars")
+      val (_, r) = meter(Meter.force(probe))
+      f""""q208state":{"build_sec":$buildSec%.2f,"probe_sec":${r.sec}%.2f,"shuffle_write_mb":${r.writeMb}%.1f,"shuffle_read_mb":${r.readMb}%.1f,"rows":${probe.count()}}"""
     }
 
     // q153 THROUGH the partitioned-bloom pruner (the composition the
@@ -244,9 +171,6 @@ object CorpusScaleSmoke {
     // wastes bitmap bytes, never correctness.
     val bloomLine = if (!wanted("q153bloom")) None else Some {
       import org.apache.spark.sql.functions._
-      Thread.sleep(1000)
-      val w0 = shufWrite.get(); val r0 = shufRead.get()
-      val t0 = System.nanoTime()
       val sh = spark.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"),
           explode(call_function("graft_shingles", col("text"), lit(13)))
@@ -263,18 +187,14 @@ object CorpusScaleSmoke {
         .join(trainSh, Seq("shingle"), "left_semi")
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_dirty_13grams"))
-      val rows = dirty.count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(1000)
-      // byte deltas captured BEFORE the plain-twin equality check so its
-      // shuffle never pollutes this line
-      val wMb = (shufWrite.get() - w0) / 1e6
-      val rMb = (shufRead.get() - r0) / 1e6
+      // metered BEFORE the plain-twin equality check so its shuffle
+      // never pollutes this line
+      val (rows, r) = meter(dirty.count())
       val plainRows = SparkEntry.queries("q153_decontaminate_13gram")(spark, dir)
         .count()
       require(rows == plainRows,
         s"bloom-pruned q153 produced $rows dirty docs, plain join $plainRows")
-      f""""q153bloom":{"sec":$sec%.2f,"shuffle_write_mb":$wMb%.1f,"shuffle_read_mb":$rMb%.1f,"rows":$rows}"""
+      s""""q153bloom":{${r.json},"rows":$rows}"""
     }
 
     // SourceOverlap boilerplate blowup vs the df cap (r8 VERDICT #1):
@@ -297,22 +217,17 @@ object CorpusScaleSmoke {
             concat(lit("g"), col("id") - 1)),
           transform(sequence(lit(0), lit(37)),
             i => concat(lit("u"), col("id"), lit("_"), i)))).as("k"))
-      def run(cap: Int): (Double, Long, Long, Long) = {
-        Thread.sleep(1000)
-        val w0 = shufWrite.get(); val r0 = shufRead.get()
-        val t0 = System.nanoTime()
-        val m = graft.operators.SourceOverlap.matrix(keyed, "src", "k", cap)
-        val pairs = m.agg(sum(col("n_shared"))).head().getLong(0)
-        val sec = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(1000)
+      def run(cap: Int): (Long, Meter.Reading) = {
+        val res = meter(graft.operators.SourceOverlap.matrix(keyed, "src", "k", cap)
+          .agg(sum(col("n_shared"))).head().getLong(0))
         graft.operators.SourceOverlap.releaseCache()
-        (sec, shufWrite.get() - w0, shufRead.get() - r0, pairs)
+        res
       }
-      val (uSec, uW, uR, uPairs) = run(Int.MaxValue)
-      val (cSec, cW, cR, cPairs) = run(2)
+      val (uPairs, u) = run(Int.MaxValue)
+      val (cPairs, c) = run(2)
       require(uPairs == 10L * s * (s - 1) / 2 + (s - 1) && cPairs == s - 1L,
         s"overlap-cap smoke: pair sums $uPairs / $cPairs off the closed form")
-      f""""overlap_uncapped":{"sec":$uSec%.2f,"shuffle_write_mb":${uW / 1e6}%.1f,"shuffle_read_mb":${uR / 1e6}%.1f,"pairs":$uPairs},"overlap_capped":{"sec":$cSec%.2f,"shuffle_write_mb":${cW / 1e6}%.1f,"shuffle_read_mb":${cR / 1e6}%.1f,"pairs":$cPairs}"""
+      s""""overlap_uncapped":{${u.json},"pairs":$uPairs},"overlap_capped":{${c.json},"pairs":$cPairs}"""
     }
 
     println(s"""{"dir":"$dir","n_docs":$n,${(lines ++ q185StateLine ++ q208StateLine ++ bloomLine ++ overlapCapLine).mkString(",")}}""")

@@ -1,9 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Amortized decontamination smoke (round 8) — measures the claim the
@@ -31,31 +28,12 @@ object DecontamWarehouseSmoke {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val batches = args.lift(1).map(_.toInt).getOrElse(5)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", 8 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val shufWrite = new AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val m = e.stageInfo.taskMetrics
-        if (m != null) shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-    })
+    val spark = GraftSession.start(GraftSession.bench(GraftSession.cpus(32)))
+    val meter = Meter(spark)
+    // result, wall seconds, shuffle write MB
     def timed[T](f: => T): (T, Double, Double) = {
-      Thread.sleep(500)
-      val w0 = shufWrite.get(); val t0 = System.nanoTime()
-      val r = f
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500)
-      (r, sec, (shufWrite.get() - w0) / 1e6)
+      val (res, r) = meter(f)
+      (res, r.sec, r.writeMb)
     }
 
     val tmp = java.nio.file.Files.createTempDirectory("graft-decontam").toString

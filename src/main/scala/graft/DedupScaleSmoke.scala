@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dedup-pipeline scale smoke (round-3 VERDICT item 7): measured evidence
@@ -19,18 +18,8 @@ object DedupScaleSmoke {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", 8 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def time[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
+    val spark = GraftSession.start(GraftSession.bench(GraftSession.cpus(32)))
+    val meter = Meter(spark)
     import graft.operators.{ConnectedComponents, Dedup}
 
     val docs = spark.read.parquet(s"$dir/documents.parquet")
@@ -44,7 +33,7 @@ object DedupScaleSmoke {
       .toDF("band", "bhash")
       .groupBy(col("band"), col("bhash")).agg(count(lit(1)).as("n"))
     // coalesce: on an empty documents table the sums/max aggregate to null
-    val (bucketStats, tSig) = time {
+    val (bucketStats, sig) = meter {
       buckets.agg(
         coalesce(sum(when(col("n") <= 1000, expr("n * (n - 1) div 2"))
           .otherwise(0L)), lit(0L)).as("candidate_pairs"),
@@ -60,20 +49,16 @@ object DedupScaleSmoke {
       .localCheckpoint(true)
     val nEdges = pairs.count()
     val nodes = docs.select(col("doc_id").as("id"))
-    val ((labels, ccRounds), tCc) =
-      time(ConnectedComponents.alternatingStarWithRounds(pairs, nodes))
+    val ((labels, ccRounds), cc) =
+      meter(ConnectedComponents.alternatingStarWithRounds(pairs, nodes))
     val comp = labels.groupBy(col("component")).agg(count(lit(1)).as("sz"))
       .agg(count(lit(1)).as("n_components"),
         coalesce(max(col("sz")), lit(0L)).as("max_cluster"))
       .head()
 
     // 3. the three oracle queries end-to-end at this scale
-    def runq(name: String): Double =
-      time(SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save())._2
-    val t69 = runq("q69_near_dup_components")
-    val t84 = runq("q84_incremental_dedup")
-    val t88 = runq("q88_authority_rank")
+    val queryLines = meter.queries(dir,
+      Seq("q69_near_dup_components", "q84_incremental_dedup", "q88_authority_rank"))
 
     println(
       s"""{"dir":"$dir","n_docs":$nDocs,""" +
@@ -82,8 +67,8 @@ object DedupScaleSmoke {
         s""""max_bucket":${bucketStats.getLong(2)},""" +
         s""""verified_edges":$nEdges,"cc_rounds":$ccRounds,""" +
         s""""n_components":${comp.getLong(0)},"max_cluster":${comp.getLong(1)},""" +
-        f""""sig_bucket_sec":$tSig%.2f,"cc_sec":$tCc%.2f,""" +
-        f""""q69_sec":$t69%.2f,"q84_sec":$t84%.2f,"q88_sec":$t88%.2f}""")
+        f""""sig_bucket_sec":${sig.sec}%.2f,"cc_sec":${cc.sec}%.2f,""" +
+        queryLines.mkString(",") + "}")
     spark.stop()
   }
 }

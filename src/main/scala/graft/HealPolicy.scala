@@ -1,5 +1,8 @@
 package graft
 
+import org.json4s._
+import org.json4s.jackson.JsonMethods
+
 /** Pure decision rules for [[Bench]]'s post-suite stall healing
   * (round 7) — extracted so the policy is unit-testable without a
   * SparkSession. The flow per measured line, at suite end:
@@ -132,64 +135,28 @@ object HealPolicy {
   def shortName(n: String): String =
     if (n.startsWith("q")) n.takeWhile(_ != '_').drop(1) else n
 
-  /** Base-36 form of a bare-number compact key ("134" -> "3q") — the
-    * next compression level when the compact line outgrows its budget
-    * (the line then carries `"kf":"b36"`). Non-numeric keys (the
-    * x-prefixed extras) pass through unchanged. */
-  def b36Key(k: String): String =
-    if (k.nonEmpty && k.forall(_.isDigit))
-      java.lang.Long.toString(k.toLong, 36)
-    else k
-
-  /** x10 scaled-line key compression ("x10_q167_segment_dedup" ->
-    * "x10_167") — the rung AFTER b36 (r10: ~40 x10 lines at full names
-    * were the dominant term once the base keys were already folded; the
-    * line carries `"kf":"b36x"`). Only x10_qNNN keys fold; the few
-    * x_ann/x_asof extras stay as-is. */
-  private val X10Name = "^x10_q(\\d+)_.*$".r
-
-  def xShortKey(k: String): String = k match {
-    case X10Name(num) => s"x10_$num"
-    case _ => k
-  }
-
-  /** The two ANN train-line keys, folded for the LAST compact rung
-    * ("kf":"b36xt", r13 — the with-lists b36x+cs line reached
-    * 1888/1900 at 199 base queries). The short forms keep an
-    * underscore ON PURPOSE: an all-[0-9a-z] key like "xpt" would be
-    * b36-parsed by [[decodeKey]]; '_' fails its charset test, so the
-    * fold is decode-safe. [[canonKey]] folds BOTH generations. */
+  /** The two ANN train-line keys, folded for the compact line's "qx"
+    * side object ("x132_pq_train" -> "x_pt"). [[canonKey]] folds the
+    * full names too, so full-name and compact artifacts meet. */
   def trainShortKey(k: String): String = k match {
     case "x132_pq_train" => "x_pt"
     case "x133_ivfpq_train" => "x_it"
     case _ => k
   }
 
-  /** Decode a compact-artifact key back to the decimal form, given the
-    * artifact's declared key format ("b36"/"b36x" or absent/decimal) —
-    * lets the cross-round prior-median lookup read any generation.
-    * (x10_NNN stays short — [[canonKey]] folds BOTH generations to
-    * that form, so matching never needs the full name back.) */
-  def decodeKey(k: String, keyFormat: Option[String]): String =
-    if (keyFormat.exists(_.startsWith("b36")) &&
-        k.nonEmpty && k.forall(c => c.isDigit || (c >= 'a' && c <= 'z')))
-      java.lang.Long.parseLong(k, 36).toString
-    else k
-
   /** Canonical match key for cross-round lookups: numeric keys lose
-    * their zero padding ("05" and the b36 round-trip "5" must meet),
-    * x10 lines fold to their short form from EITHER generation
-    * ("x10_q167_segment_dedup" and "x10_167" must meet), everything
-    * else passes through. */
+    * their zero padding ("05" from a full name and "5" from the range
+    * spec must meet), the train keys fold to their short forms,
+    * everything else passes through. */
   def canonKey(k: String): String =
     if (k.nonEmpty && k.forall(_.isDigit)) k.toLong.toString
-    else trainShortKey(xShortKey(k))
+    else trainShortKey(k)
 
   /** Decode a compact-artifact median back to seconds, given the
-    * artifact's declared value format — "cs" (r9 rung: centisecond
-    * INTEGERS, ~2 chars shorter per entry) or absent/seconds. The
-    * encode side is `round(median·100)` in Bench.renderQs; 10 ms
-    * resolution is well inside the 1.4× regression-probe bar. */
+    * artifact's declared value format — "cs" (centisecond INTEGERS,
+    * ~2 chars shorter per entry) or absent/seconds. The encode side is
+    * `round(median·100)` in Bench.renderFinal; 10 ms resolution is well
+    * inside the 1.4× regression-probe bar. */
   def decodeMedian(v: Double, valueFormat: Option[String]): Double =
     valueFormat match {
       case Some("cs") => v / 100.0
@@ -257,4 +224,63 @@ object HealPolicy {
       .mkString("{", ",", "}")
     Some((qn, qv, qx))
   }
+
+  /** The bench line inside a driver BENCH_rNN.json envelope
+    * ({"parsed":{...}}), or the raw line itself. */
+  private def benchLine(json: String): JValue = {
+    val root = JsonMethods.parse(json)
+    if ((root \ "parsed") != JNothing) root \ "parsed" else root
+  }
+
+  private def num(j: JValue): Option[Double] = j match {
+    case JDouble(v) => Some(v)
+    case JInt(v) => Some(v.toDouble)
+    case JDecimal(v) => Some(v.toDouble)
+    case _ => None
+  }
+
+  /** The prior round's medians in seconds, by [[canonKey]] of their
+    * [[shortName]]. A `queries` OBJECT is full-name seconds whatever
+    * "kf"/"vf" say: the driver's r13+ envelopes merge the full-name
+    * medians line with the compact line's "kf":"arr","vf":"cs" fields,
+    * and reading that object as an arr array kept no base priors at
+    * all. A `queries` ARRAY is the compact arr line: positional medians
+    * in the "vf" format, keyed by the "qn" range spec, plus the "qx"
+    * side object. Unparsable input yields no priors, never an error. */
+  def priorMedians(json: String): Map[String, Double] = try {
+    val line = benchLine(json)
+    val vf = line \ "vf" match {
+      case JString(s) => Some(s)
+      case _ => None
+    }
+    line \ "queries" match {
+      case JObject(kvs) =>
+        kvs.flatMap { case (k, j) => num(j).map(canonKey(shortName(k)) -> _) }.toMap
+      case JArray(vs) =>
+        // positional decode is alignment-critical (r12, ADVICE): one
+        // non-numeric entry or a qn/array length mismatch would shift
+        // every later median onto the wrong key — either yields no
+        // numeric priors instead
+        val vals = vs.map(num)
+        val names = line \ "qn" match {
+          case JString(spec) => decodeRanges(spec)
+          case _ => Seq.empty
+        }
+        val numeric =
+          if (vals.forall(_.isDefined) && names.length == vals.length)
+            names.zip(vals.flatten).map { case (n, v) => n.toString -> decodeMedian(v, vf) }
+          else Nil
+        val extras = line \ "qx" match {
+          case JObject(kvs) =>
+            kvs.flatMap { case (k, j) => num(j).map(v => canonKey(k) -> decodeMedian(v, vf)) }
+          case _ => Nil
+        }
+        (numeric ++ extras).toMap
+      case _ => Map.empty
+    }
+  } catch { case _: Exception => Map.empty }
+
+  /** The prior round's pre-suite job floor, when the line carries one. */
+  def priorFloor(json: String): Option[Double] =
+    try num(benchLine(json) \ "floor") catch { case _: Exception => None }
 }

@@ -1,52 +1,47 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Dev tool: write `.explain("formatted")` output for named SparkEntry
-  * queries to files — the before/after plan evidence the optimization
-  * protocol requires (plans/rNN/<query>_before.txt / _after.txt).
+/** Dev tool: for named SparkEntry queries, print a few operator counts of
+  * the executed plan and write its `.explain("formatted")` output to a
+  * file — the before/after plan evidence the optimization protocol
+  * requires (plans/rNN/<query>_before.txt / _after.txt).
   *
   * Usage: tools/run_class.sh graft.PlanFormat <q1,q2,...|all> <sfDir> <outDir> [suffix]
   *
   * Writes <outDir>/<query>_<suffix>.txt (suffix defaults to "plan").
-  * The session mirrors Bench's config (AQE, 64 MB broadcast threshold,
-  * small-file splits) so the dumped plan is the one the bench executes.
+  * The session is the Bench preset, so the dumped plan is the one the
+  * bench executes.
   */
 object PlanFormat {
+
+  // word-start anchored: a bare "Exchange" substring would also match
+  // every ReusedExchange/BroadcastExchange, inflating the one count
+  // this tool exists to report (the shuffle exchange)
+  private val Counted = Seq("ReusedExchange", "Exchange", "FileScan parquet",
+    "graft_shingles", "BroadcastExchange", "WindowExec", "SortMergeJoin",
+    "BroadcastHashJoin")
+
   def main(args: Array[String]): Unit = {
     val names = args(0)
     val sfDir = args(1)
     val outDir = args(2)
     val suffix = if (args.length > 3) args(3) else "plan"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.sql.files.maxPartitionBytes", 4 * 1024 * 1024)
-      .config("spark.sql.files.openCostInBytes", 1024 * 1024)
-      .config("spark.sql.files.minPartitionNum", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.start(GraftSession.bench(GraftSession.cpus(32)))
     val selected =
       if (names == "all") SparkEntry.queries.keys.toSeq.sorted
       else names.split(",").map(_.trim).toSeq
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     selected.foreach { name =>
       try {
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        val txt = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+        val qe = SparkEntry.queries(name)(spark, sfDir).queryExecution
+        val plan = qe.executedPlan.toString
+        println(name + Counted.map(k =>
+          s"  $k=${s"(?<![A-Za-z])$k".r.findAllIn(plan).size}").mkString)
         java.nio.file.Files.write(
           java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt"),
-          txt.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        println(s"wrote $name")
+          qe.explainString(ExplainMode.fromString("formatted"))
+            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       } catch {
         case e: Throwable => println(s"FAILED $name: ${e.getMessage}")
       }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew-join scale smoke: measured evidence that each skew operator
@@ -37,20 +37,11 @@ object SkewScaleSmoke {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/repo/benchdata/sf1x10")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE's own skew mitigation stays ON — the baseline below is
-      // "everything Spark does automatically", so the operators must
-      // beat an honest opponent, not a strawman
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", -1)
-      .config("spark.sql.files.maxPartitionBytes", 8 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // AQE's own skew mitigation stays ON (the preset enables it) — the
+    // baseline below is "everything Spark does automatically", so the
+    // operators must beat an honest opponent, not a strawman
+    val spark = GraftSession.start(GraftSession.bench(GraftSession.cpus(32)) +
+      ("spark.sql.autoBroadcastJoinThreshold" -> "-1"))
 
     def fact: DataFrame = spark.read.parquet(s"$dir/events.parquet")
       .select(col("event_id"),
@@ -65,21 +56,14 @@ object SkewScaleSmoke {
       j.groupBy(col("k")).agg(count(lit(1)).as("n"),
         sum(pmod(col("payload"), lit(997L))).as("checksum"))
 
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    def bench(name: String, df: => DataFrame): Double = {
-      Bench.force(df) // warm
-      val ts = Seq.fill(3)(time(Bench.force(df))).sorted
-      ts(1)
-    }
+    def bench(df: => DataFrame): Double = Meter.median(Meter.force(df))
 
     val n = fact.count()
-    val plainA = bench("A plain", agg(fact.join(dim, Seq("k"))))
-    val saltedA = bench("A salted", agg(
+    val plainA = bench(agg(fact.join(dim, Seq("k"))))
+    val saltedA = bench(agg(
       graft.operators.SkewJoin.salted(fact, dim, "k",
         distributeBy = col("event_id"), buckets = 16)))
-    val splitA = bench("A hotSplit", agg(
+    val splitA = bench(agg(
       graft.operators.SkewJoin.hotSplit(fact, dim, "k",
         hotThreshold = math.max(2L, n / 25))))
 
@@ -96,11 +80,11 @@ object SkewScaleSmoke {
     def aggB(j: DataFrame): DataFrame =
       j.groupBy(pmod(col("k"), lit(32L)).as("g"))
         .agg(count(lit(1)).as("n"), sum(col("payload") + col("lv")).as("checksum"))
-    val plainB = bench("B plain", aggB(leftB.join(rightB, Seq("k"))))
-    val saltedB = bench("B salted", aggB(
+    val plainB = bench(aggB(leftB.join(rightB, Seq("k"))))
+    val saltedB = bench(aggB(
       graft.operators.SkewJoin.salted(leftB, rightB, "k",
         distributeBy = col("lv"), buckets = 16)))
-    val splitB = bench("B hotSplit", aggB(
+    val splitB = bench(aggB(
       graft.operators.SkewJoin.hotSplit(leftB, rightB, "k",
         hotThreshold = math.max(2L, n / 100))))
 

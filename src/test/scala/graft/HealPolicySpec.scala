@@ -91,32 +91,8 @@ class HealPolicySpec extends AnyFunSuite {
       "x10_ann_ivf256_index_build")
   }
 
-  test("base-36 degradation keys round-trip through decodeKey") {
-    assert(HealPolicy.b36Key("134") == "3q")
-    assert(HealPolicy.b36Key("05") == "5")
-    assert(HealPolicy.b36Key("153") == "49") // all-digit b36 is legal
-    assert(HealPolicy.b36Key("x132_pq_train") == "x132_pq_train")
-    for (k <- Seq("01", "05", "82", "134", "153", "999")) {
-      assert(HealPolicy.decodeKey(HealPolicy.b36Key(k), Some("b36")) ==
-        k.toLong.toString, k)
-    }
-    // decimal artifacts (no kf) pass through untouched
-    assert(HealPolicy.decodeKey("134", None) == "134")
-    assert(HealPolicy.decodeKey("x132_pq_train", Some("b36")) ==
-      "x132_pq_train")
-    // canonical match keys: zero padding never breaks a prior lookup
-    assert(HealPolicy.canonKey("05") == "5")
-    assert(HealPolicy.canonKey(
-      HealPolicy.decodeKey(HealPolicy.b36Key("05"), Some("b36"))) ==
-      HealPolicy.canonKey("05"))
-    // r13: the train keys canonicalize to their b36xt short form from
-    // EITHER generation (prior full-name artifacts still match)
-    assert(HealPolicy.canonKey("x132_pq_train") == "x_pt")
-    assert(HealPolicy.canonKey("x_pt") == "x_pt")
-  }
-
   test("cs rung medians round-trip through decodeMedian (r9)") {
-    // encode side is round(median*100) in Bench.renderQs
+    // encode side is round(median*100) in Bench.renderFinal
     for (m <- Seq(0.12, 1.005, 2.74, 15.3, 0.0)) {
       val enc = math.round(m * 100).toDouble
       val dec = HealPolicy.decodeMedian(enc, Some("cs"))
@@ -130,35 +106,17 @@ class HealPolicySpec extends AnyFunSuite {
     assert(HealPolicy.decodeMedian(10.0, Some("cs")) == 0.1)
   }
 
-  test("b36x rung folds x10 keys and both generations meet at canonKey (r10)") {
-    assert(HealPolicy.xShortKey("x10_q167_segment_dedup") == "x10_167")
-    assert(HealPolicy.xShortKey("x10_q05_group_summary") == "x10_05")
-    // only x10_qNNN folds — the ann/asof extras and base keys pass through
-    for (k <- Seq("x_ann_pq_index_build", "x132_pq_train", "134", "05",
-        "x10_ann_ivf256_index_build"))
-      assert(HealPolicy.xShortKey(k) == k, k)
-    // cross-generation matching: a prior artifact's full x10 name and a
-    // b36x artifact's short key canonicalize identically
-    assert(HealPolicy.canonKey("x10_q167_segment_dedup") ==
-      HealPolicy.canonKey(HealPolicy.decodeKey("x10_167", Some("b36x"))))
-  }
-
-  test("b36xt rung folds the train keys decode-safely (r13)") {
-    // the short forms keep an underscore ON PURPOSE: all-[0-9a-z]
-    // keys would be b36-parsed by decodeKey ("xpt" IS a valid base-36
-    // number) — '_' fails the charset test
+  test("train keys fold to their qx short forms; canonKey meets both") {
     assert(HealPolicy.trainShortKey("x132_pq_train") == "x_pt")
     assert(HealPolicy.trainShortKey("x133_ivfpq_train") == "x_it")
     assert(HealPolicy.trainShortKey("x_ann_pq_index_build") ==
       "x_ann_pq_index_build")
-    assert(HealPolicy.decodeKey("x_pt", Some("b36xt")) == "x_pt")
-    // cross-generation: a prior full-name artifact and a b36xt
-    // artifact's short key canonicalize identically
-    assert(HealPolicy.canonKey("x133_ivfpq_train") ==
-      HealPolicy.canonKey(HealPolicy.decodeKey("x_it", Some("b36xt"))))
-    // b36x still decodes the base numeric keys like b36 did
-    assert(HealPolicy.decodeKey("3q", Some("b36x")) == "134")
-    assert(HealPolicy.decodeKey("3q", Some("b36")) == "134")
+    // cross-generation: a full-name artifact and a compact artifact's
+    // short key canonicalize identically
+    assert(HealPolicy.canonKey("x133_ivfpq_train") == HealPolicy.canonKey("x_it"))
+    assert(HealPolicy.canonKey("x132_pq_train") == "x_pt")
+    // zero padding never breaks a prior lookup
+    assert(HealPolicy.canonKey("05") == "5")
   }
 
   test("r8 whole-suite-hot shape: per-line probes fire and CONFIRM, " +
@@ -292,5 +250,52 @@ class HealPolicySpec extends AnyFunSuite {
     // and the budget holds with generous growth: ~100 more queries
     // before 1900 (the next rung's trigger), at 4 chars/entry
     assert(line.length + 100 * 4 < 1900)
+  }
+
+  // ---- prior-median loading ----
+
+  // An r14-shaped driver envelope: the full-name medians line (seconds)
+  // merged with the compact line's kf/vf/qn/qx fields.
+  private val r14Envelope =
+    """{"n":14,"rc":0,"cpus":32,"sf":"sf0.1","tail":"...","parsed":{""" +
+      """"metric":"total","value":113.211,"unit":"sec","floor":0.243,""" +
+      """"floor_post":0.018,"floor_r":1.74,"rerun":{},"regr":["x132_pq_train"],""" +
+      """"queries":{"q01_scan_region":0.098,"q05_group_summary":0.261,""" +
+      """"q134_setsim_join":1.38,"x132_pq_train":1.191,"x133_ivfpq_train":1.634,""" +
+      """"x10_q190_phash_incr":2.9,"x_ann_ivf_append":0.4},""" +
+      """"sf":"/data/sf0.1","kf":"arr","vf":"cs","suspect":[],"regr_n":2,""" +
+      """"qn":"1,5,134","qx":{"x_pt":119,"x_it":163}}}"""
+
+  test("priorMedians reads a full-name seconds object whatever kf/vf say " +
+      "(r14 envelope)") {
+    val p = HealPolicy.priorMedians(r14Envelope)
+    // every line of the object is a prior, in seconds (no cs scaling),
+    // under the key Bench looks it up by
+    def prior(name: String) = p.get(HealPolicy.canonKey(HealPolicy.shortName(name)))
+    assert(prior("q01_scan_region").contains(0.098))
+    assert(prior("q05_group_summary").contains(0.261))
+    assert(prior("q134_setsim_join").contains(1.38))
+    assert(prior("x132_pq_train").contains(1.191))
+    assert(prior("x133_ivfpq_train").contains(1.634))
+    assert(prior("x10_q190_phash_incr").contains(2.9))
+    assert(prior("x_ann_ivf_append").contains(0.4))
+    assert(p.size == 7)
+    assert(HealPolicy.priorFloor(r14Envelope).contains(0.243))
+    // so the r14 incident shape flags: x10_q190 ran 2.9x slower
+    assert(HealPolicy.regressed(8.41, prior("x10_q190_phash_incr")))
+  }
+
+  test("priorMedians decodes a raw arr line: positional cs medians + qx") {
+    val line = """{"metric":"total","floor":0.14,"kf":"arr","vf":"cs",""" +
+      """"qn":"1-2,10","queries":[9,45,123],"qx":{"x_pt":119}}"""
+    assert(HealPolicy.priorMedians(line) ==
+      Map("1" -> 0.09, "2" -> 0.45, "10" -> 1.23, "x_pt" -> 1.19))
+    // a qn/array length mismatch would misalign every later key: no
+    // numeric priors, the side object survives
+    val skewed = line.replace("1-2,10", "1-3,10")
+    assert(HealPolicy.priorMedians(skewed) == Map("x_pt" -> 1.19))
+    // unparsable input: no priors, never an error
+    assert(HealPolicy.priorMedians("not json").isEmpty)
+    assert(HealPolicy.priorFloor("not json").isEmpty)
   }
 }
