@@ -172,15 +172,14 @@ object Curation {
     } else PatchResult(p.product_id, tagsFinalJson, "approved", None, unknown_field = true)
   }
 
-  /** P7 distributed: join patches to products on the key and apply. One
-    * patch per product per call (the reference is one HTTP call per patch);
-    * returns (patched rows to merge, feedback rows to append). */
   /** One patched row + its optional feedback event — the single-pass
     * output both downstream sinks derive from. */
   final case class PatchOutcome(result: PatchResult, feedback: Option[FeedbackRow])
 
-  /** The single-pass form: each (patch ⋈ product) row is patched ONCE and
-    * carries both the result and the feedback event. Multi-sink consumers
+  /** P7 distributed: patches join products on the key and each
+    * (patch ⋈ product) row is patched ONCE, carrying both the result and
+    * the feedback event (one patch per product per call; the reference is
+    * one HTTP call per patch). Multi-sink consumers
     * should materialize this once (localCheckpoint) before fanning out —
     * deriving two Datasets from the un-materialized map re-executes the
     * patch per sink. */
@@ -199,13 +198,6 @@ object Curation {
           .map(rv => FeedbackRow(pid, field, rv, reason, cat, curator))
         PatchOutcome(r, fb)
       }
-  }
-
-  def patchTags(products: DataFrame, patches: Dataset[TagPatch])
-  : (Dataset[PatchResult], Dataset[FeedbackRow]) = {
-    import patches.sparkSession.implicits._
-    val combined = patchTagsCombined(products, patches)
-    (combined.map(_.result), combined.flatMap(_.feedback))
   }
 
   // ---- P8: mark-curated multi-sink (curate.py:7239-7352) ----
@@ -254,120 +246,15 @@ object Curation {
       productStamps: DataFrame, // → products (S6 keyed update)
       historyAppend: DataFrame) // → curation_history (S7 append)
 
-  // ---- change-summary column path (closed shapes; no UDF) ----
-
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
-
-  private val entryArrT = ArrayType(StructType(Seq(StructField("value", StringType))))
-  private val entryT = StructType(Seq(StructField("value", StringType)))
-  private val modT = StructType(Seq(StructField("from", StringType), StructField("to", StringType)))
-  private val addedSchema = StructType(ArrayFields.map(f => StructField(f, entryArrT)))
-  private val deletedSchema = StructType(
-    ArrayFields.map(f => StructField(f, entryArrT)) ++
-      SingleFields.map(f => StructField(f, entryT)))
-  private val modifiedSchema = StructType(SingleFields.map(f => StructField(f, modT)))
-
-  private def feedbackMapKeys(tags: Column, key: String): Column =
-    json_object_keys(get_json_object(tags, s"$$.$key"))
-
-  /** Fragments for one array-valued field, in entry order ("f:value"). */
-  private def arrayFrags(parsed: Column, f: String): Column =
-    when(parsed.getField(f).isNotNull,
-      transform(parsed.getField(f), x => concat(lit(f + ":"), x.getField("value"))))
-      .otherwise(array().cast("array<string>"))
-
-  private def singleFrag(parsed: Column, f: String): Column = {
-    val v = parsed.getField(f).getField("value")
-    when(v.isNotNull, array(concat(lit(f + ":"), v)))
-      .otherwise(array().cast("array<string>"))
-  }
-
-  private def modFrag(parsed: Column, f: String): Column = {
-    val e = parsed.getField(f)
-    when(e.isNotNull && e.getField("from").isNotNull && e.getField("to").isNotNull,
-      array(concat(lit(f + ": "), e.getField("from"), lit(" → "), e.getField("to"))))
-      .otherwise(array().cast("array<string>"))
-  }
-
-  private def section(label: String, frags: Column): Column =
-    when(size(frags) > 0, concat(lit(label), array_join(frags, ", ")))
-
-  /** The CLOSED-shape predicate: true iff the three feedback maps contain
-    * only the known field names with entries shaped exactly as
-    * [[applyTagPatch]] writes them (array fields → [{value: string}…] with
-    * no null/missing values, single fields → {value: string}, modified →
-    * {from: string, to: string}). On closed shapes the column summary below
-    * reproduces [[feedbackChangeSummary]] exactly; anything else falls back
-    * to the UDF. */
-  private def isClosedShape(tags: Column, addedJ: Column, deletedJ: Column,
-                            modifiedJ: Column): Column = {
-    def keysOk(key: String, allowed: Seq[String]): Column =
-      coalesce(forall(feedbackMapKeys(tags, key), k => k.isin(allowed: _*)), lit(true))
-    def arrOk(key: String, parsed: Column, f: String): Column = {
-      val present = coalesce(array_contains(feedbackMapKeys(tags, key), f), lit(false))
-      !present || (parsed.getField(f).isNotNull &&
-        !exists(parsed.getField(f), x => x.getField("value").isNull))
-    }
-    def singleOk(key: String, parsed: Column, f: String): Column = {
-      val present = coalesce(array_contains(feedbackMapKeys(tags, key), f), lit(false))
-      !present || parsed.getField(f).getField("value").isNotNull
-    }
-    def modOk(f: String): Column = {
-      val present = coalesce(array_contains(feedbackMapKeys(tags, "modified_tags"), f), lit(false))
-      val e = modifiedJ.getField(f)
-      !present || (e.isNotNull && e.getField("from").isNotNull && e.getField("to").isNotNull)
-    }
-    val keyChecks = keysOk("added_tags", ArrayFields) &&
-      keysOk("deleted_tags", ArrayFields ++ SingleFields) &&
-      keysOk("modified_tags", SingleFields)
-    val valueChecks =
-      ArrayFields.map(f => arrOk("added_tags", addedJ, f) && arrOk("deleted_tags", deletedJ, f))
-        .reduce(_ && _) &&
-        SingleFields.map(f => singleOk("deleted_tags", deletedJ, f) && modOk(f)).reduce(_ && _)
-    keyChecks && valueChecks
-  }
-
-  /** Change summary as a pure column over `tags_final` for closed shapes —
-    * same sorted-field sections ("Added: f:v, …; Removed: …; Modified:
-    * f: a → b") as [[feedbackChangeSummary]]. Returns null when the shape
-    * is open (fall back to the UDF).
-    *
-    * NOT the default path, by measurement: Catalyst does not
-    * common-subexpression-eliminate get_json_object/from_json, so the
-    * shape checks + fragments here re-parse tags_final ~30× per row —
-    * benched 7× SLOWER than the single-parse UDF on the q49 pipeline
-    * (10.1 s vs 1.4 s at sf0.1; BASELINE.md). The UDF is the scale path
-    * for open-shaped JSON; this column form exists for pipelines that
-    * need pure-Column semantics (e.g. streaming sinks barring UDFs) and
-    * as an executable spec of the closed-shape summary (CurationSpec
-    * asserts equivalence). */
-  def changeSummaryColumn(tags: Column): Column = {
-    val addedJ = from_json(get_json_object(tags, "$.added_tags"), addedSchema)
-    val deletedJ = from_json(get_json_object(tags, "$.deleted_tags"), deletedSchema)
-    val modifiedJ = from_json(get_json_object(tags, "$.modified_tags"), modifiedSchema)
-    val addedFrags = concat(ArrayFields.sorted.map(f => arrayFrags(addedJ, f)): _*)
-    val deletedFrags = concat(
-      (ArrayFields.map(f => f -> arrayFrags(deletedJ, f)) ++
-        SingleFields.map(f => f -> singleFrag(deletedJ, f)))
-        .sortBy(_._1).map(_._2): _*)
-    val modFrags = concat(SingleFields.sorted.map(f => modFrag(modifiedJ, f)): _*)
-    val joined = array_join(
-      filter(array(
-        section("Added: ", addedFrags),
-        section("Removed: ", deletedFrags),
-        section("Modified: ", modFrags)), s => s.isNotNull), "; ")
-    when(isClosedShape(tags, addedJ, deletedJ, modifiedJ), joined)
-  }
-
   /** P8 — one source DF (product_id, tags_final, original_ai_tags JSON)
     * fans out to the three curation sinks as pure transformations; callers
     * write them with upsert/append (the reference's three HTTP writes,
     * curate.py:7239-7352). */
   def markCurated(products: DataFrame, curatedBy: String, asOf: String,
                   curationVersion: String = "v1"): CurationOutputs = {
-    // one json4s parse per row — measured 7× faster than the
-    // changeSummaryColumn expression form (see its scaladoc); JSON here is
+    // one json4s parse per row; a pure-column form re-parsed tags_final
+    // ~30× per row (Catalyst does not CSE get_json_object/from_json) and
+    // benched 7× slower on the q49 pipeline (BASELINE.md). JSON here is
     // open-shaped by reference contract (SURVEY §2.12)
     val summaryUdf = udf(feedbackChangeSummary _)
     val base = products.select(

@@ -134,28 +134,26 @@ object NaiveBayes {
       maxBroadcastModelRows)
   }
 
-  /** The eager half of [[scoreCore]] — everything that depends only on
-    * the model STATE (never on the rows to score): the count-state
-    * checkpoint, the per-class scalars, and (when the state fits the
-    * broadcast guard) the broadcast w → lg-vector map. Split out (r14,
-    * guide §2.6) so a composed pipeline (IngestCapstone) can build the
-    * model on a driver thread CONCURRENTLY with its other rungs'
-    * actions instead of serializing ~6 driver round trips behind them;
-    * [[prepareModel]] + [[scoreWithModel]] compute exactly what the
-    * fused scoreCore did, in the same order. The map is built whenever
-    * the state fits the guard — a non-integral-id caller would waste
-    * that one vocab-bounded collect, but every current caller routes
-    * integral ids (the r11 idIntegral rule decides at apply time). */
-  private[graft] final case class NbModel(
-      counts: DataFrame, srcs: Array[String], lgnvArr: Array[Long],
-      priorArr: Array[Long], v: Long, modelRows: Long, maxModel: Long,
-      bc: Option[org.apache.spark.broadcast.Broadcast[
-        java.util.HashMap[String, Array[Long]]]])
+  /** Integral id types — the ones the Long-typed row-local scorers
+    * carry exactly (cast to Long and back). */
+  private def isIntegral(t: org.apache.spark.sql.types.DataType): Boolean = t match {
+    case org.apache.spark.sql.types.ByteType |
+         org.apache.spark.sql.types.ShortType |
+         org.apache.spark.sql.types.IntegerType |
+         org.apache.spark.sql.types.LongType => true
+    case _ => false
+  }
 
-  private[graft] def prepareModel(wordCountsIn: DataFrame,
-                                  docCountsIn: DataFrame,
-                                  maxModel: Long = MaxBroadcastModelRows): NbModel = {
-    val spark = wordCountsIn.sparkSession
+  /** Shared scorer over the model state (src, w, c) + (src, d). Below
+    * the model-size guard, the apply path is the q177 shape — model
+    * broadcast as a map, every document scored row-locally in ONE
+    * corpus pass with zero shuffles; above it, a word-keyed relational
+    * join chain computes the same integers. */
+  private def scoreCore(wordCountsIn: DataFrame, docCountsIn: DataFrame,
+                        toScore: DataFrame, idCol: String, labelCol: String,
+                        textCol: String, maxModel: Long): DataFrame = {
+    val spark = toScore.sparkSession
+    import spark.implicits._
     // three consumers (per-class rollup, size rollup, model build)
     // — materialize the count state once (the q167/q174 lesson)
     val counts = wordCountsIn.localCheckpoint(true)
@@ -187,7 +185,24 @@ object NaiveBayes {
         "state cannot score anything)")
     val lgnvArr = srcs.map(s => ilg(perSrcN(s) + v))
     val priorArr = srcs.map(s => ilg(dBySrc(s)) - ilg(dt))
-    val bc = if (modelRows <= maxModel) {
+
+    // r11 (ADVICE): the typed fast path scores ids as Long — a
+    // non-integral id column would silently null out under the cast and
+    // diverge from the fallback (which carries ids untouched). Integral
+    // ids cast back to their exact input type after scoring; any other
+    // id type routes to the relational path, which is id-type-agnostic
+    // and never pays the vocab collect the broadcast map needs.
+    val idType = toScore.schema(idCol).dataType
+
+    if (modelRows <= maxModel && isIntegral(idType)) {
+      // FAST PATH: the model is exactly the thing small enough to ship
+      // to every executor (that is the point of NB) — w → per-class
+      // lg(c+1) vector, broadcast once; each document then scores in
+      // place: Σ-accumulate over its tokens, subtract n_words·lgnv,
+      // argmax with the (score desc, label asc) ladder. ONE corpus
+      // pass, ZERO scoring shuffles (the q177 broadcast-vocab apply
+      // shape). Long arithmetic end to end — exact through ~2·10¹²
+      // tokens per DOCUMENT (lg ≤ 63·2¹⁶), the q183 regime convention.
       val srcIdx = srcs.zipWithIndex.toMap
       val nSrc = srcs.length
       val modelMap = new java.util.HashMap[String, Array[Long]](
@@ -197,53 +212,7 @@ object NaiveBayes {
           _ => new Array[Long](nSrc))
         arr(srcIdx(r.getString(0))) = ilg(r.getLong(2) + 1L)
       }
-      Some(spark.sparkContext.broadcast(modelMap))
-    } else None
-    NbModel(counts, srcs, lgnvArr, priorArr, v, modelRows, maxModel, bc)
-  }
-
-  /** Shared scorer over the model state (src, w, c) + (src, d). Below
-    * the model-size guard, the apply path is the q177 shape — model
-    * broadcast as a map, every document scored row-locally in ONE
-    * corpus pass with zero shuffles; above it, a word-keyed relational
-    * join chain computes the same integers. */
-  private def scoreCore(wordCountsIn: DataFrame, docCountsIn: DataFrame,
-                        toScore: DataFrame, idCol: String, labelCol: String,
-                        textCol: String, maxModel: Long): DataFrame =
-    scoreWithModel(prepareModel(wordCountsIn, docCountsIn, maxModel),
-      toScore, idCol, labelCol, textCol)
-
-  private[graft] def scoreWithModel(m: NbModel, toScore: DataFrame,
-                                    idCol: String, labelCol: String,
-                                    textCol: String): DataFrame = {
-    val spark = toScore.sparkSession
-    import spark.implicits._
-    val NbModel(counts, srcs, lgnvArr, priorArr, _, modelRows, maxModel, bcOpt) = m
-
-    // r11 (ADVICE): the typed fast path scores ids as Long — a
-    // non-integral id column would silently null out under the cast and
-    // diverge from the fallback (which carries ids untouched). Integral
-    // ids cast back to their exact input type after scoring; any other
-    // id type routes to the relational path, which is id-type-agnostic.
-    val idType = toScore.schema(idCol).dataType
-    val idIntegral = idType match {
-      case org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType => true
-      case _ => false
-    }
-
-    if (modelRows <= maxModel && idIntegral) {
-      // FAST PATH: the model is exactly the thing small enough to ship
-      // to every executor (that is the point of NB) — w → per-class
-      // lg(c+1) vector, broadcast once; each document then scores in
-      // place: Σ-accumulate over its tokens, subtract n_words·lgnv,
-      // argmax with the (score desc, label asc) ladder. ONE corpus
-      // pass, ZERO scoring shuffles (the q177 broadcast-vocab apply
-      // shape). Long arithmetic end to end — exact through ~2·10¹²
-      // tokens per DOCUMENT (lg ≤ 63·2¹⁶), the q183 regime convention.
-      val bc = bcOpt.get
+      val bc = spark.sparkContext.broadcast(modelMap)
       val bcLgnv = lgnvArr; val bcPrior = priorArr; val bcSrcs = srcs
       toScore
         .select(col(idCol).cast("long"), col(labelCol).cast("string"),
@@ -321,7 +290,6 @@ object NaiveBayes {
     }
   }
 
-
   /** Leave-one-out classification — the honest evaluation (in-sample
     * [[classify]] scores every document against a model its own tokens
     * helped train, which flatters accuracy). NB supports LOO in closed
@@ -355,13 +323,7 @@ object NaiveBayes {
     // routed around the Long-typed scorer (r11, ADVICE) — refuse loudly
     // instead of nulling ids out under the cast
     val looIdType = docs.schema(idCol).dataType
-    require(looIdType match {
-      case org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType => true
-      case _ => false
-    }, s"classifyLoo requires an integral id column; '$idCol' is " +
+    require(isIntegral(looIdType), s"classifyLoo requires an integral id column; '$idCol' is " +
       s"$looIdType — project a numeric id first")
     val counts = wordCounts(docs, labelCol, textCol).localCheckpoint(true)
     val perSrcN = counts.groupBy(col("src")).agg(sum(col("c")).as("n"))

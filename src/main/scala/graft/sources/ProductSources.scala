@@ -9,10 +9,12 @@ import org.apache.spark.sql.types._
   * S3 — JSON-document directory scan: the reference walks
   * `data/<brand>/<gender>/<category>/<product_id>/metadata.json` and injects
   * `category` from the directory name (curate.py:180-210). Spark-first:
-  * one distributed `spark.read.json` over a glob with an explicit schema
-  * (never inferred in production paths — SURVEY §1.4), category derived
-  * from `input_file_name()`. Scales to millions of files via file-listing
-  * parallelism; no driver-side walk.
+  * one distributed scan with an explicit schema (never inferred in
+  * production paths — SURVEY §1.4) through the `product-tree` DataSource
+  * V2 connector ([[graft.sources.v2.ProductTreeSource]]), the reader q107
+  * checks against the oracle. It lists one glob per category in parallel
+  * on the driver, never walks product directories one by one, and prunes
+  * category filters and unread columns at the source.
   */
 object ProductSources {
 
@@ -49,15 +51,11 @@ object ProductSources {
 
   /** S3: scan `<root>/<category>/<product_id>/metadata.json`; category from
     * the path (overriding any embedded value, as the reference does), brand
-    * defaulted when absent. */
-  def readProductTree(spark: SparkSession, root: String,
-                      defaultBrand: String = "zara"): DataFrame =
-    spark.read.schema(rawProductSchema)
-      .option("multiLine", "true") // pretty-printed documents, one per file
-      .json(s"$root/*/*/metadata.json")
-      .withColumn("category",
-        element_at(split(input_file_name(), "/"), -3))
-      .withColumn("brand_name", lit(defaultBrand))
+    * the connector's constant. Columns: [[rawProductSchema]], then `brand_name`.
+    * A missing root fails at the first action, naming the path; an empty
+    * root reads zero rows. */
+  def readProductTree(spark: SparkSession, root: String): DataFrame =
+    spark.read.format("product-tree").option("path", root).load()
 
   /** S9 — JSONL export sink (export_training_data.py:209-212): one JSON
     * object per line. */

@@ -15,7 +15,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.{DataSourceRegister, EqualNullSafe, EqualTo, Filter, In, IsNotNull}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
@@ -28,10 +28,10 @@ import graft.sources.ProductSources
   * `data/<category>/<product_id>/metadata.json` and its curator re-walks
   * that tree on the driver, injecting `category` from the directory name
   * (reference: curate.py:180-210, zara_extractor.py:555-568).
-  * [[ProductSources.readProductTree]] (S3) already re-models the walk as a
-  * distributed `spark.read.json` glob; this connector is the full V2
-  * expression of the same contract, and is what the scan should look like
-  * at 100 TB:
+  * This connector re-models the walk as one distributed scan and is the
+  * only reader of the tree: [[ProductSources.readProductTree]] (S3) and
+  * q107 both read through it. It is what the scan should look like at
+  * 100 TB:
   *
   *   - '''Partition pruning at the source.''' `category = 'x'` /
   *     `category IN (...)` filters are consumed by the scan builder and
@@ -50,9 +50,12 @@ import graft.sources.ProductSources
   *
   * Registered as `spark.read.format("product-tree")` via
   * `DataSourceRegister` (META-INF/services). Options: `path` (tree root,
-  * required), `brand` (default "zara"), `filesPerPartition` (default 512),
-  * `mode` (`permissive` default — malformed documents yield null fields
-  * with `category` still set from the path; `failfast` throws).
+  * required) and `mode` (`permissive` default — malformed documents yield
+  * null fields with `category` still set from the path; `failfast`
+  * throws). The brand is the constant [[ProductTreeTable.Brand]] and
+  * each input partition holds up to [[ProductTreeTable.FilesPerPartition]]
+  * documents. A missing root fails at the first action, naming the path;
+  * an empty root reads zero rows.
   *
   * Scale note: listing is one glob per surviving category (not one RPC
   * per product directory). Millions of tiny metadata files remain a
@@ -73,18 +76,18 @@ class ProductTreeSource extends TableProvider with DataSourceRegister {
 }
 
 object ProductTreeTable {
-  /** Raw JSON fields + the two derived columns, same shape and order as
-    * [[ProductSources.readProductTree]]. `category` is ALWAYS path-derived
-    * (overriding any embedded value, as the reference does); `brand_name`
-    * is the constant brand option. */
+  /** The brand every document of the tree carries (`brand_name`). */
+  val Brand = "zara"
+  /** Documents per input partition. */
+  val FilesPerPartition = 512
+
+  /** The raw product schema (S3's column order) + `brand_name`.
+    * `category` keeps its raw position but is ALWAYS path-derived
+    * (overriding any embedded value, as the reference does);
+    * `brand_name` is the constant [[Brand]]. */
   val derivedFields = Seq("category", "brand_name")
-  val fullSchema: StructType = StructType(
-    ProductSources.rawProductSchema.fields.filterNot(_.name == "category") ++
-      Seq(org.apache.spark.sql.types.StructField("category",
-          org.apache.spark.sql.types.StringType, nullable = true),
-        // the constant brand, non-nullable like S3's lit() column
-        org.apache.spark.sql.types.StructField("brand_name",
-          org.apache.spark.sql.types.StringType, nullable = false)))
+  val fullSchema: StructType = ProductSources.rawProductSchema
+    .add(StructField("brand_name", StringType, nullable = false))
 }
 
 class ProductTreeTable(options: CaseInsensitiveStringMap)
@@ -99,13 +102,10 @@ class ProductTreeTable(options: CaseInsensitiveStringMap)
 
   override def newScanBuilder(caseInsensitiveOptions: CaseInsensitiveStringMap): ScanBuilder =
     new ProductTreeScanBuilder(root,
-      Option(options.get("brand")).getOrElse("zara"),
-      Option(options.get("filesPerPartition")).map(_.toInt).getOrElse(512),
       Option(options.get("mode")).getOrElse("permissive").toLowerCase)
 }
 
-class ProductTreeScanBuilder(root: String, brand: String,
-                             filesPerPartition: Int, mode: String)
+class ProductTreeScanBuilder(root: String, mode: String)
   extends ScanBuilder
   with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
 
@@ -147,14 +147,13 @@ class ProductTreeScanBuilder(root: String, brand: String,
     required = requiredSchema
 
   override def build(): Scan =
-    ProductTreeScan(root, brand, required, categories,
-      consumed.map(_.toString).toSeq, filesPerPartition, mode)
+    ProductTreeScan(root, required, categories,
+      consumed.map(_.toString).toSeq, mode)
 }
 
-case class ProductTreeScan(root: String, brand: String, required: StructType,
+case class ProductTreeScan(root: String, required: StructType,
                            categories: Option[Set[String]],
-                           pushedDescription: Seq[String],
-                           filesPerPartition: Int, mode: String)
+                           pushedDescription: Seq[String], mode: String)
   extends Scan with Batch with SupportsReportStatistics {
 
   override def readSchema(): StructType = required
@@ -179,36 +178,31 @@ case class ProductTreeScan(root: String, brand: String, required: StructType,
     // listed — and the globs run in parallel: listing latency (not
     // parsing) dominates a many-category tree, and each glob is an
     // independent namenode/object-store round trip
-    // (ConnectorScaleSmoke: 200 sequential globs cost 1.7 s of a 2.0 s
-    // full read at 40k docs)
-    if (cats.length <= 1) {
-      cats.flatMap { c =>
-        fs.globStatus(new Path(c, "*/metadata.json"))
-          .filter(_.isFile).map(s => (s.getPath.toString, s.getLen))
-      }
-    } else {
+    // (measured: 200 sequential globs cost 1.7 s of a 2.0 s full read
+    // at 40k docs, BASELINE.md)
+    def docs(c: Path): Array[(String, Long)] =
+      fs.globStatus(new Path(c, "*/metadata.json"))
+        .filter(_.isFile).map(s => (s.getPath.toString, s.getLen))
+    if (cats.length <= 1) cats.flatMap(docs)
+    else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.min(16, cats.length))
       try {
-        import scala.jdk.CollectionConverters._
-        val tasks: Seq[java.util.concurrent.Callable[Array[(String, Long)]]] =
-          cats.toSeq.map { c =>
-            (() => fs.globStatus(new Path(c, "*/metadata.json"))
-              .filter(_.isFile).map(s => (s.getPath.toString, s.getLen))
-            ): java.util.concurrent.Callable[Array[(String, Long)]]
-          }
+        val tasks = cats.toSeq.map { c =>
+          (() => docs(c)): java.util.concurrent.Callable[Array[(String, Long)]]
+        }
         pool.invokeAll(tasks.asJava).asScala.toArray.flatMap(_.get())
       } finally pool.shutdown()
     }
   }
 
   override def planInputPartitions(): Array[InputPartition] =
-    listed.grouped(math.max(1, filesPerPartition))
+    listed.grouped(ProductTreeTable.FilesPerPartition)
       .map(g => ProductTreePartition(g.map(_._1)))
       .toArray[InputPartition]
 
   override def createReaderFactory(): PartitionReaderFactory =
-    ProductTreeReaderFactory(required, brand, mode,
+    ProductTreeReaderFactory(required, mode,
       new SerializableConfiguration(spark.sessionState.newHadoopConf()),
       spark.sessionState.conf.sessionLocalTimeZone)
 
@@ -224,20 +218,20 @@ case class ProductTreeScan(root: String, brand: String, required: StructType,
 
 case class ProductTreePartition(files: Array[String]) extends InputPartition
 
-case class ProductTreeReaderFactory(required: StructType, brand: String,
-                                    mode: String, conf: SerializableConfiguration,
+case class ProductTreeReaderFactory(required: StructType, mode: String,
+                                    conf: SerializableConfiguration,
                                     timeZoneId: String)
   extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new ProductTreeReader(partition.asInstanceOf[ProductTreePartition].files,
-      required, brand, mode, conf, timeZoneId)
+      required, mode, conf, timeZoneId)
 }
 
 /** One row per document. JSON conversion covers only the required
   * non-derived columns; with none required (count(*), category rollups)
   * files are never opened. */
 class ProductTreeReader(files: Array[String], required: StructType,
-                        brand: String, mode: String,
+                        mode: String,
                         conf: SerializableConfiguration, timeZoneId: String)
   extends PartitionReader[InternalRow] {
 
@@ -256,7 +250,7 @@ class ProductTreeReader(files: Array[String], required: StructType,
     else new JacksonParser(jsonSchema,
       new JSONOptionsInRead(Map("multiLine" -> "true"), timeZoneId, ""),
       allowArrayAsStructs = true, Nil)
-  private val brandUtf8 = UTF8String.fromString(brand)
+  private val brandUtf8 = UTF8String.fromString(ProductTreeTable.Brand)
 
   private var i = 0
   private var pending: Iterator[InternalRow] = Iterator.empty

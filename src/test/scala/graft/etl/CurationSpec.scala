@@ -81,11 +81,11 @@ class CurationSpec extends SparkSpec {
       TagPatch("p1", "style_identity", "remove", Some("rugged"), "tess",
         Some("not rugged"), Some("incorrect_value")),
       TagPatch("p2", "context", "add", Some("everyday"), "sam", None, None)).toDS()
-    val (results, feedback) = Curation.patchTags(products, patches)
-    val byId = results.collect().map(r => r.product_id -> r).toMap
+    val outcomes = Curation.patchTagsCombined(products, patches).collect()
+    val byId = outcomes.map(o => o.result.product_id -> o.result).toMap
     assert(parse(byId("p1").tags_final)("style_identity") == Seq("workwear"))
     assert(parse(byId("p2").tags_final)("context") == Seq("everyday"))
-    val fb = feedback.collect()
+    val fb = outcomes.flatMap(_.feedback)
     assert(fb.length == 1 && fb.head.removed_value == "rugged")
   }
 
@@ -102,33 +102,6 @@ class CurationSpec extends SparkSpec {
     val hist = out.historyAppend.collect().head
     assert(hist.getAs[String]("change_summary") == "Modified: fit: slim → relaxed")
     assert(hist.getAs[String]("curator") == "tess")
-  }
-
-  test("changeSummaryColumn: closed shapes match the UDF, open shapes fall back") {
-    import org.apache.spark.sql.functions.col
-    val closed = Seq(
-      """{"deleted_tags": {"style_identity": [{"value": "a"}, {"value": "b"}]}}""",
-      """{"added_tags": {"context": [{"value": "x", "reason": "r", "curator": "c"}]}, "modified_tags": {"fit": {"from": "a", "to": "b"}}}""",
-      """{"deleted_tags": {"fit": {"value": "slim"}, "pairing_tags": [{"value": "p"}]}}""",
-      """{}""",
-      """not json at all""")
-    val open = Seq(
-      """{"deleted_tags": {"mystery_field": [{"value": "a"}]}}""", // unknown key
-      """{"deleted_tags": {"style_identity": ["plain-string"]}}""", // stringly entry
-      """{"modified_tags": {"fit": {"from": "a"}}}""") // missing "to"
-    val rows = (closed ++ open).toDF("tags_final")
-      .select(col("tags_final"),
-        Curation.changeSummaryColumn(col("tags_final")).as("col_path"))
-      .collect()
-    rows.foreach { r =>
-      val tags = r.getString(0)
-      val colPath = Option(r.getString(1))
-      val udfVal = Curation.feedbackChangeSummary(tags)
-      if (closed.contains(tags))
-        assert(colPath.contains(udfVal), s"closed-shape divergence on $tags")
-      else
-        assert(colPath.isEmpty, s"open shape must fall back to the UDF: $tags")
-    }
   }
 
   test("feedbackChangeSummary: all three sections, sorted fields") {

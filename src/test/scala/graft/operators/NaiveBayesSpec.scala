@@ -441,6 +441,23 @@ class NaiveBayesSpec extends SparkSpec {
     assert(e.getMessage.contains("integral id"))
   }
 
+  test("the broadcast model map is built only on the fast path: a " +
+      "string-id classify runs fewer eager jobs than an integral-id one") {
+    // building the DataFrame runs the model's eager driver work; the
+    // vocab collect behind the broadcast map belongs to the fast path,
+    // which string ids never take
+    val sdocs = Seq(("doc-a", "u", "k k l"), ("doc-b", "v", "m m n"),
+      ("doc-c", "u", "k l l"))
+    val ldocs = sdocs.zipWithIndex.map { case ((_, l, t), i) => (i.toLong, l, t) }
+    val meter = graft.Meter(spark)
+    val (_, strJobs) = meter(NaiveBayes.classify(
+      sdocs.toDF("doc_id", "lang", "text"), "doc_id", "lang", "text"))
+    val (_, longJobs) = meter(NaiveBayes.classify(
+      ldocs.toDF("doc_id", "lang", "text"), "doc_id", "lang", "text"))
+    assert(strJobs.jobs < longJobs.jobs,
+      s"string ids ran ${strJobs.jobs} jobs, integral ids ${longJobs.jobs}")
+  }
+
   test("an all-token-less state refuses with the exclusion rule named " +
       "(r11, ADVICE)") {
     val docs = Seq((1L, "u", ""), (2L, "v", "   ")).toDF("doc_id", "lang", "text")

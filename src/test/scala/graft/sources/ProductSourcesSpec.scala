@@ -37,6 +37,26 @@ class ProductSourcesSpec extends SparkSpec {
     assert(comp == "linen")
   }
 
+  test("S3: columns are the raw product schema in order, then brand_name") {
+    val df = ProductSources.readProductTree(spark, writeTree())
+    assert(df.columns.toSeq ==
+      ProductSources.rawProductSchema.fieldNames.toSeq :+ "brand_name")
+  }
+
+  test("S3: a missing root fails at the first action and names the path") {
+    val root = Paths.get(Files.createTempDirectory("graft-tree").toString, "absent").toString
+    val df = ProductSources.readProductTree(spark, root) // lazy: no listing yet
+    val e = intercept[Exception](df.collect())
+    val messages = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+    assert(messages.exists(_.contains(root)), messages.mkString(" | "))
+  }
+
+  test("S3: an empty root reads zero rows") {
+    val root = Files.createTempDirectory("graft-tree").toString
+    assert(ProductSources.readProductTree(spark, root).count() == 0)
+  }
+
   test("S9/S10/S11: jsonl, envelope dump, summary sinks round-trip") {
     val tmp = Files.createTempDirectory("graft-sinks").toString
     val lines = Seq("""{"a":1}""", """{"a":2}""").toDS()

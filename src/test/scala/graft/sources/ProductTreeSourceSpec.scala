@@ -4,10 +4,11 @@ import graft.SparkSpec
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
-/** S4 connector (`format("product-tree")`): parity with the S3 glob
-  * reader, plus the two prunings asserted SEMANTICALLY — a malformed
-  * document placed where pruning should reach it must never be opened
-  * (failfast would throw if it were). */
+/** S4 connector (`format("product-tree")`, the reader behind S3's
+  * `readProductTree`): parity with an independent glob formulation of the
+  * same contract, plus the two prunings asserted SEMANTICALLY — a
+  * malformed document placed where pruning should reach it must never be
+  * opened (failfast would throw if it were). */
 class ProductTreeSourceSpec extends SparkSpec {
   import spark.implicits._
 
@@ -35,12 +36,22 @@ class ProductTreeSourceSpec extends SparkSpec {
     opts.foldLeft(r) { case (acc, (k, v)) => acc.option(k, v) }.load()
   }
 
+  /** The parity reference: S3's glob formulation — Spark's own
+    * JSON reader over a glob, category from `input_file_name()`, brand a
+    * literal — no connector code. */
+  private def globTree(root: String) =
+    spark.read.schema(ProductSources.rawProductSchema)
+      .option("multiLine", "true")
+      .json(s"$root/*/*/metadata.json")
+      .withColumn("category", element_at(split(input_file_name(), "/"), -3))
+      .withColumn("brand_name", lit("zara"))
+
   test("V2 scan matches the S3 glob reader row-for-row") {
     val root = writeTree()
-    val cols = ProductSources.readProductTree(spark, root).columns.sorted.map(col)
-    val v1 = ProductSources.readProductTree(spark, root).select(cols.toSeq: _*)
-    val v2 = tree(root).select(cols.toSeq: _*)
+    val v1 = globTree(root)
+    val v2 = tree(root)
     assert(v2.schema == v1.schema)
+    assert(ProductSources.readProductTree(spark, root).schema == v1.schema)
     assert(v2.exceptAll(v1).isEmpty && v1.exceptAll(v2).isEmpty)
     // path category overrides the embedded "WRONG" value, same as S3
     assert(tree(root).filter($"product_id" === "p1")
