@@ -57,10 +57,25 @@ import graft.operators.{Dedup, DriftMonitor, NaiveBayes, SegmentDedup}
   * q195 simulation convention — what the self-contained q208 query
   * runs), and [[ingestDecisionsFromState]] consumes an [[IngestState]]
   * of PERSISTED relations — the deployment/streaming form
-  * ([[graft.streaming.StreamingIngest]]), where each batch pays only
-  * batch-proportional work plus bounded state probes.
+  * ([[graft.streaming.StreamingIngest]]). There the batch's own work
+  * is batch-proportional, but each rung still scans its state relation
+  * once per batch; what the scan costs differs by rung:
+  *  - exact classes and the benchmark gram sets are probed by the
+  *    batch's keys (a semi-join to the batch's class keys; inner joins
+  *    built on the batch's grams), so only matching state rows go on;
+  *  - LSH bands are semi-joined to the buckets the batch touches, and
+  *    the docs join candidate pairs only (q185's probe);
+  *  - the segment-hash state is de-duplicated and broadcast whole
+  *    against the batch's lines (q171's rung as it stands);
+  *  - the NB word counts are merged whole with the survivors' counts
+  *    and materialized once (vocabulary-bounded, not corpus-bounded);
+  *  - doc counts, PSI bins and the plan are class-, bin- and
+  *    source-bounded.
+  * State size thus reaches a batch as scan IO and, for segment hashes
+  * and NB counts, as a state-sized exchange — never as a driver loop.
   *
-  * Scale shape: the batch is pinned once (`localCheckpoint`) and
+  * Scale shape: the batch is pinned once (`localCheckpoint`; the
+  * streaming sink pins it itself and enters at [[verdicts]]) and
   * every rung touches warehouse state the way its proven incremental
   * form does — segment hashes, LSH bands, count/histogram state are
   * all bounded or banded, never all-pairs; the NB gate scores only
@@ -234,9 +249,9 @@ object IngestCapstone {
       numShards, maxMoves, psiBinWidth, psiAlertE9, lshThreshold)
 
   /** [[ingestDecisions]] off persisted [[IngestState]] relations —
-    * identical decision table (spec-pinned), batch-proportional work:
-    * the batch is lined/hashed/signed/shingled/tokenized once each;
-    * warehouse contact is the member rungs' own bounded probes. */
+    * identical decision table (spec-pinned): the batch is pinned here
+    * and lined/hashed/signed/shingled/tokenized once each; warehouse
+    * contact is the member rungs' own probes (see the object doc). */
   def ingestDecisionsFromState(state: IngestState, batch0: DataFrame,
                                idCol: String, labelCol: String,
                                sourceCol: String, textCol: String,
@@ -245,37 +260,46 @@ object IngestCapstone {
                                psiBinWidth: Long = 100L,
                                psiAlertE9: Long = 100000000L,
                                lshThreshold: Double = 0.3): DataFrame = {
-    graft.plans.GraftExtensions.ensure(batch0.sparkSession)
     // every rung reads the batch — pin it once (multi-consumer rule)
     val batch = batch0
       .select(col(idCol), col(labelCol), col(sourceCol), col(textCol),
         col(weightCol))
       .localCheckpoint(true)
+    route(verdicts(state, batch, idCol, labelCol, sourceCol, textCol,
+        weightCol, psiBinWidth, lshThreshold),
+      state.existingPlan, idCol, sourceCol, weightCol, numShards,
+      maxMoves, psiAlertE9).decisions
+  }
+
+  /** Rungs 1-6 of the ladder: one row per batch doc with its evidence,
+    * NB prediction and `verdict`, plus the batch's PSI scalar. */
+  private[graft] final case class Verdicts(rows: DataFrame, psiE9: Long)
+
+  /** The routed decision table, and the budgeted re-plan its routes came
+    * from (source, weight, shard) — the plan a deployment persists, so a
+    * batch re-plans once. */
+  private[graft] final case class Routed(decisions: DataFrame,
+                                         plan: DataFrame)
+
+  /** The verdict rungs over an already PINNED batch of exactly
+    * (idCol, labelCol, sourceCol, textCol, weightCol) — the streaming
+    * sink pins its batch once for the ladder and its state deltas, and
+    * pins the verdicts before it routes them. */
+  private[graft] def verdicts(state: IngestState, batch: DataFrame,
+                              idCol: String, labelCol: String,
+                              sourceCol: String, textCol: String,
+                              weightCol: String, psiBinWidth: Long,
+                              lshThreshold: Double): Verdicts = {
+    graft.plans.GraftExtensions.ensure(batch.sparkSession)
 
     // Overlap the independent driver actions (r14, guide §2.6 — actions
-    // are only sequential because the driver calls them sequentially).
-    // Two legs are independent of the pre-verdict ladder and used to
-    // run strictly AFTER its checkpoint:
-    //  - the WAREHOUSE side of the NB count state (the model's one
-    //    corpus-proportional input — the survivors' own counts must
-    //    wait for `pre`, but the warehouse counts never depend on it);
-    //    materializing it here makes classifyIncremental's later merge
-    //    checkpoint a cheap vocab-bounded union instead of the full
-    //    warehouse tokenize (a localCheckpoint is semantically
-    //    transparent — same counts, same merge);
-    //  - the PSI gate scalar (refBins + batch bins — batch-only).
-    // Both launch on driver side threads whose single-task stages
-    // back-fill the cores the pre-DAG's own single-task stages leave
-    // idle, and both are awaited INSIDE this call — nothing leaks past
-    // it, values and plans are identical to the sequential form.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    val (pre, nb, psiE9) = try {
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val whWordCountsF = scala.concurrent.Future {
-      state.nbWordCounts.localCheckpoint(true)
-    }
-    val psiF = scala.concurrent.Future {
+    // are only sequential because the driver calls them sequentially):
+    // the PSI gate scalar (refBins + batch bins — batch-only) runs as a
+    // side leg whose single-task stages back-fill the cores the pre-DAG's
+    // own single-task stages leave idle. It is awaited INSIDE this call,
+    // and a failure on either side cancels the other ([[SideLegs]]).
+    val (pre, nb, psiE9) = SideLegs.run(batch.sparkSession) { legs =>
+    val psiF = legs.fork {
       DriftMonitor
         .psiFromBinCounts(state.refBins,
           DriftMonitor.binCounts(batch, weightCol, psiBinWidth))
@@ -291,13 +315,15 @@ object IngestCapstone {
       .select(col(idCol), col("n_segments"), col("n_removed"))
 
     // 2. exact: min id over the normalized-text class of warehouse ∪
-    //    batch — state classes min-merged with the batch's own (state
-    //    appends need not be aggregated; least() skips the absent side)
+    //    batch — the state classes semi-filtered to the batch's own
+    //    class keys, then min-merged with the batch's (state appends
+    //    need not be aggregated; least() skips the absent side)
     val batchMin = batch.select(normHash(textCol).as("__nh"), col(idCol))
       .groupBy(col("__nh")).agg(min(col(idCol)).as("__bm"))
-    val classMin = state.exactClasses
+    val whMin = state.exactClasses
+      .join(batchMin.select(col("__nh")), Seq("__nh"), "left_semi")
       .groupBy(col("__nh")).agg(min(col("__m")).as("__wm"))
-      .join(batchMin, Seq("__nh"), "full")
+    val classMin = batchMin.join(whMin, Seq("__nh"), "left")
       .select(col("__nh"), least(col("__wm"), col("__bm")).as("__m"))
     val exact = batch.select(col(idCol), normHash(textCol).as("__nh"))
       .join(classMin, Seq("__nh"))
@@ -329,15 +355,24 @@ object IngestCapstone {
       .groupBy(col("id_b").as(idCol)).agg(min(col("id_a")).as("__nrs"))
 
     // 4. decontamination vs the benchmark (q202's layers): distinct
-    //    13-gram hits, distinct-3-gram containment
+    //    13-gram hits, distinct-3-gram containment. The static gram
+    //    sets are probed by inner joins, where the smaller side builds
+    //    (a stream batch's grams; a left join would always build, and
+    //    broadcast, the whole benchmark set). The sets are distinct
+    //    (ingestState writes them so), so join rows are exactly the
+    //    hits. The 3-gram denominator counts the batch's grams alone,
+    //    in the SAME aggregate as the hits (a union of gram and hit
+    //    rows: one shuffle, not two aggregates and a join)
     val d13 = shingleSet(batch, idCol, textCol, 13)
       .join(state.bench13, Seq("__s"))
       .groupBy(col(idCol)).agg(count(lit(1)).as("__n13"))
-    val c3 = shingleSet(batch, idCol, textCol, 3)
-      .join(state.bench3.withColumn("__hit", lit(1L)), Seq("__s"), "left")
+    val grams3 = shingleSet(batch, idCol, textCol, 3)
+    val c3 = grams3.select(col(idCol), lit(0L).as("__hit"))
+      .unionByName(grams3.join(state.bench3, Seq("__s"))
+        .select(col(idCol), lit(1L).as("__hit")))
       .groupBy(col(idCol))
-      .agg(count(lit(1)).as("__n3"),
-        sum(coalesce(col("__hit"), lit(0L))).as("__nh3"))
+      .agg(sum(lit(1L) - col("__hit")).as("__n3"),
+        sum(col("__hit")).as("__nh3"))
 
     // pre-NB evidence + the dedup/decontam rungs of the ladder — one
     // batch-sized row set consumed by the survivor semi-join, the NB
@@ -368,43 +403,44 @@ object IngestCapstone {
       .localCheckpoint(true)
 
     // 5. NB gate over SURVIVORS only — warehouse count state merged
-    //    with the survivors' own counts (drops feed priors). The
-    //    warehouse counts were materialized concurrently above; the
-    //    merge + scalars here touch vocab-bounded rows + batch tokens.
+    //    with the survivors' own counts (drops feed priors); the merged
+    //    state is materialized once, inside the scorer
     val survivors = batch.join(
       pre.filter(col("__pre").isNull).select(col(idCol)),
       Seq(idCol), "left_semi")
-    val nb = NaiveBayes.classifyIncremental(
-        scala.concurrent.Await.result(whWordCountsF,
-          scala.concurrent.duration.Duration.Inf),
-        state.nbDocCounts,
-        survivors, idCol, labelCol, textCol)
+    val nb = NaiveBayes.classifyIncremental(state.nbWordCounts,
+        state.nbDocCounts, survivors, idCol, labelCol, textCol)
       .select(col(idCol), col("predicted"), col("margin_e16"))
 
     // 6. PSI gate — one bounded driver scalar (q203's exact algebra),
-    //    computed by the concurrent leg above
-    (pre,
-      nb,
-      scala.concurrent.Await.result(psiF,
-        scala.concurrent.duration.Duration.Inf))
-    // shutdown lets in-flight side jobs finish; a main-thread failure
-    // must not interrupt a Spark job mid-stage, only stop the threads
-    } finally pool.shutdown()
+    //    computed by the side leg above
+    (pre, nb, legs.awaitAll(Seq(psiF)).head)
+    }
 
-    val decided = pre.join(nb, Seq(idCol), "left")
+    Verdicts(pre.join(nb, Seq(idCol), "left")
       .withColumn("verdict", coalesce(col("__pre"),
         when(col("predicted") =!= col(labelCol), lit("nb_disagrees"))
-          .otherwise(lit("kept"))))
+          .otherwise(lit("kept")))),
+      psiE9)
+  }
 
-    // 7. budgeted shard re-plan over the kept docs only
-    val plan = ShardPlanner.replanShards(state.existingPlan,
+  /** 7. the budgeted shard re-plan over the kept docs only, and the
+    * decision table routed by it. */
+  private[graft] def route(verdicts: Verdicts, existingPlan: DataFrame,
+                           idCol: String, sourceCol: String,
+                           weightCol: String,
+                           numShards: Int, maxMoves: Int,
+                           psiAlertE9: Long): Routed = {
+    val decided = verdicts.rows
+    val psiE9 = verdicts.psiE9
+    val replan = ShardPlanner.replanShards(existingPlan,
         decided.filter(col("verdict") === "kept")
           .select(col(sourceCol), col(weightCol)),
         sourceCol, weightCol, numShards, maxMoves)
-      .select(col(sourceCol), col("shard").as("__shard"),
-        col("moved").as("__moved"))
+    val plan = replan.select(col(sourceCol), col("shard").as("__shard"),
+      col("moved").as("__moved"))
 
-    decided.join(plan, Seq(sourceCol), "left")
+    val decisions = decided.join(plan, Seq(sourceCol), "left")
       .select(col(idCol), col(sourceCol),
         col("n_segments"), col("n_removed"),
         when(col("verdict") === "exact_dup", col("__exs"))
@@ -416,5 +452,7 @@ object IngestCapstone {
         lit(psiE9 >= psiAlertE9).as("drift_alert"),
         when(col("verdict") === "kept", col("__shard")).as("shard"),
         when(col("verdict") === "kept", col("__moved")).as("moved"))
+    Routed(decisions,
+      replan.select(col(sourceCol), col("weight"), col("shard")))
   }
 }

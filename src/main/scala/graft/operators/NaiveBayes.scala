@@ -154,24 +154,32 @@ object NaiveBayes {
                         textCol: String, maxModel: Long): DataFrame = {
     val spark = toScore.sparkSession
     import spark.implicits._
-    // three consumers (per-class rollup, size rollup, model build)
-    // — materialize the count state once (the q167/q174 lesson)
+    // two consumers (the scalar action, the model build) — materialize
+    // the count state once (the q167/q174 lesson)
     val counts = wordCountsIn.localCheckpoint(true)
 
-    // Per-class scalars via TWO tiny driver collects (the
-    // KMeans-centroid rule — S is bounded like a centroid list), with
-    // lgnv/prior computed by the SAME IntLog2 kernel the column
-    // expression would run. Classes are those with ≥ 1 training token
-    // (token-less classes carry no usable likelihood — the oracle's
-    // pn ⋈ dc inner-join semantics).
-    val perSrcN = counts.groupBy(col("src")).agg(sum(col("c")).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val sizesRow = counts
-      .agg(countDistinct(col("w")).as("v"), count(lit(1)).as("rows"))
-      .head()
-    val (v, modelRows) = (sizesRow.getLong(0), sizesRow.getLong(1))
-    val dBySrc = docCountsIn.collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    // Per-class scalars via ONE tiny driver collect (the
+    // KMeans-centroid rule — S is bounded like a centroid list): the
+    // per-class token totals N_s, |V| with the model row count, and the
+    // class document counts D_s, as tagged rows of one union. lgnv and
+    // the priors are then computed by the SAME IntLog2 kernel the
+    // column expression would run. Classes are those with ≥ 1 training
+    // token (token-less classes carry no usable likelihood — the
+    // oracle's pn ⋈ dc inner-join semantics).
+    val tagged = Seq(
+      counts.groupBy(col("src")).agg(sum(col("c")).as("x"))
+        .select(lit("n").as("k"), col("src"), col("x"), lit(0L).as("y")),
+      counts.agg(countDistinct(col("w")).as("x"), count(lit(1)).as("y"))
+        .select(lit("v").as("k"), lit(null).cast("string").as("src"),
+          col("x"), col("y")),
+      docCountsIn.select(lit("d").as("k"), col("src"),
+        col("d").cast("long").as("x"), lit(0L).as("y")))
+      .reduce(_ unionByName _)
+      .collect()
+    def of(k: String) = tagged.filter(_.getString(0) == k)
+    val perSrcN = of("n").map(r => r.getString(1) -> r.getLong(2)).toMap
+    val (v, modelRows) = of("v").map(r => (r.getLong(2), r.getLong(3))).head
+    val dBySrc = of("d").map(r => r.getString(1) -> r.getLong(2)).toMap
     val dt = dBySrc.values.sum
     val ilg = graft.functions.IntLog2.ilog2e16 _
     val srcs = perSrcN.keys.toArray.sorted

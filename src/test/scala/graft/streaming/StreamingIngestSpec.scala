@@ -226,4 +226,85 @@ class StreamingIngestSpec extends SparkSpec {
     assert(d1.getAs[String]("verdict") == "exact_dup" &&
       d1.getAs[Long]("survivor") == keptId)
   }
+
+  /** The spec's warehouse (sf0.001 docs < 300, every 7th held out as
+    * the batch), bootstrapped; returns its dir and the batch. */
+  private def bootstrapped(): (String, DataFrame) = {
+    val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
+      .filter(col("doc_id") < 300)
+      .select(cols.map(col): _*)
+      .localCheckpoint(true)
+    val isBatch = col("doc_id") % 7 === 0
+    val whDir = java.nio.file.Files
+      .createTempDirectory("graft-stream-ingest-floor").toString
+    StreamingIngest.bootstrap(whDir, docs.filter(!isBatch),
+      docs.filter(!isBatch && col("doc_id") % 10 === 0),
+      "doc_id", "lang", "source", "text", "n_chars")
+    (whDir, docs.filter(isBatch))
+  }
+
+  test("one batch pays no schema-inference job and at most 86 jobs") {
+    val (whDir, batch) = bootstrapped()
+    // Spark's parquet schema inference reads footers in a job of its
+    // own, outside any SQL execution; every job the sink means to run
+    // belongs to one (with inferred schemas, a re-plan per consumer and
+    // sequential writes the sink ran 11 inference jobs and 106 jobs in
+    // all on this warehouse; 85 now)
+    val outside = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.sql.execution.id") == null)
+          outside.add(e.jobId)
+    }
+    val meter = graft.Meter(spark)
+    spark.sparkContext.addSparkListener(l)
+    val (_, r) = try meter(StreamingIngest.ingestSink(whDir, "doc_id",
+        "lang", "source", "text", "n_chars")(batch, 0L))
+      finally spark.sparkContext.removeSparkListener(l)
+    info(s"${r.jobs} jobs, ${r.stages} stages, ${r.tasks} tasks")
+    assert(outside.isEmpty,
+      s"${outside.size} jobs ran outside a SQL execution (schema inference)")
+    assert(r.jobs <= 86, s"the sink ran ${r.jobs} jobs")
+  }
+
+  test("every state schema the sink reads with equals the schema of the " +
+      "files bootstrap and the sink write") {
+    val (whDir, batch) = bootstrapped()
+    StreamingIngest.ingestSink(whDir, "doc_id", "lang", "source", "text",
+      "n_chars")(batch, 0L)
+    val schemas = StreamingIngest.stateSchemas(
+      batch, "doc_id", "lang", "source", "text", "n_chars")
+    val static = Set("config", "bench13", "bench3", "ref_bins")
+    schemas.foreach { case (dir, shape) =>
+      val files =
+        if (static(dir)) Seq(s"$whDir/$dir")
+        else Seq(-1, 0).map(b => s"$whDir/$dir/batch=$b")
+          .filter(p => new java.io.File(p).exists)
+      assert(files.nonEmpty, s"no files for $dir")
+      files.foreach { p =>
+        assert(spark.read.parquet(p).schema === shape, s"$p")
+      }
+    }
+  }
+
+  test("a failing state-delta write fails the sink with its own error " +
+      "and leaves no job of its leg group running") {
+    val (whDir, batch) = bootstrapped()
+    // a plain file where the bin_deltas directory goes: that one write
+    // fails (nothing reads bin_deltas under the default fixed reference)
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(whDir, "bin_deltas"), "not a directory")
+    graft.etl.SideLegJobs.watching(spark) { g =>
+      val e = intercept[Exception] {
+        StreamingIngest.ingestSink(whDir, "doc_id", "lang", "source",
+          "text", "n_chars")(batch, 0L)
+      }
+      val chain = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(_.toString).mkString("\n")
+      assert(chain.contains("bin_deltas"), chain)
+      assert(g.started.size > 0, "the writes ran outside the leg group")
+      assert(g.running.isEmpty, s"jobs still running: ${g.running}")
+    }
+  }
 }
